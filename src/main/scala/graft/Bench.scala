@@ -1,7 +1,7 @@
 package graft
 
-import java.nio.file.Files
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.TimeUnit
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -13,33 +13,153 @@ import graft.sink.ResultTable
 import graft.streaming.StreamJob
 
 /**
- * Benchmark main. Emits ONE JSON line:
+ * Benchmark main. Emits ONE final JSON line (`"metric":"total"`):
  *
- *  - `queries`: per-query wall seconds for every SparkEntry query at
- *    SPARK_GRAFT_SF_DIR with SPARK_GRAFT_CPUS (the driver contract);
- *  - `stream`: the authoritative BASELINE metric — sustained
- *    extracted-rows/sec of the full streaming pipeline (watermark
- *    dedup → session stitch → Catalyst extraction → exactly-once
- *    sink; in-memory state store by default at this state size,
- *    RocksDB via SPARK_GRAFT_STATE_STORE for state ≫ memory),
- *    measured on the SAME deterministic
- *    input at local[N] and local[4N] (default N=8), plus
- *    `scaling_efficiency` = (rate_4N / rate_N) / 4 — the sandbox
- *    evidence for the two-cluster-size criterion (BASELINE.md), with
- *    `verified` = sink rows == batch-oracle rows (throughput of
- *    CORRECT output, exactly-once included).
+ *  - `queries`: per-query wall seconds (min of [[QueryReps]] after an
+ *    untimed sf0.001 warm pass) for every SparkEntry query at
+ *    SPARK_GRAFT_SF_DIR; a query that throws is listed in
+ *    `failed_queries` instead and counts toward no time;
+ *  - `stream`: the BASELINE metric — verified extracted rows/s of the
+ *    full streaming pipeline (watermark dedup → session stitch →
+ *    Catalyst extraction → exactly-once sink) at N and 4N threads on
+ *    the same deterministic corpus, and `scaling_efficiency` =
+ *    rate_4N / (4 · rate_N).
+ *
+ * The stream phase is one fixed protocol, sized from the box it runs
+ * on: cpus = SPARK_GRAFT_CPUS capped at the available processors,
+ * N = max(1, ⌊cpus/4⌋), 4N = min(4N, cpus). One synthesis fork writes
+ * the corpus and its expected row count; then one fresh JVM per level
+ * (4N, then N) runs an untimed warm pass and [[Attempts]] timed
+ * passes. Rates are the median (and min/max) of the verified attempts.
+ * The modes a fork runs in are program arguments:
+ *
+ * {{{
+ *   graft.Bench                                  full run (queries + stream)
+ *   graft.Bench synth <cpus> <inDir> <docs>      print BENCHSYNTH <expected>
+ *   graft.Bench level <cpus> <inDir> <expected>  print BENCHRATE <attempts>
+ * }}}
+ *
+ * This main reports the paper's numbers; A/B measurement of an engine
+ * change against its parent is `perfbench/` (perfbench/README.md).
  */
 object Bench {
 
+  /** Scaling-efficiency target of the two-cluster-size criterion. */
+  val Target = 0.8
+  /** A raw ratio above 1.0 but within this tolerance is near-perfect
+    * scaling plus attempt-to-attempt noise and reported as 1.0; above
+    * it the N level must have run slower than the engine does, and the
+    * pair says nothing about scaling (credible:false). */
+  val SuperlinearTolerance = 1.05
+  /** Timed passes per level, after one untimed warm pass. */
+  val Attempts = 3
+  /** Timed runs per query; the min is reported. */
+  val QueryReps = 2
+  /** A fork that has not exited by then is killed and its level is
+    * dead: a hung child must not hang the run that reports on it. */
+  private val ForkTimeoutSec = 3600L
+  private val GiB = 1L << 30
+  /** Bytes one document takes in the synthesized parquet corpus, with
+    * headroom: sf0.01's 200k-doc corpus measures 285 B/doc. */
+  private val CorpusBytesPerDoc = 1024L
+  /** Fork heap one document needs: the stitch state holds every doc
+    * until the flush batch closes its session (0.7-0.9 KiB/doc measured
+    * at 0.2M-1.4M docs), plus the scan, shuffle and sink writer and GC
+    * headroom. */
+  private val HeapBytesPerDoc = 3072L
+
+  // ---- sizing from the box ---------------------------------------
+
+  /** Thread counts of the scaling pair (N, 4N); on fewer than four CPUs
+    * the upper level is `cpus` itself. */
+  def levels(cpus: Int): (Int, Int) = {
+    val n = math.max(1, cpus / 4)
+    (n, math.min(4 * n, cpus))
+  }
+
+  /** Heap of each forked JVM: a quarter of the box's memory, at least
+    * 1 GiB and at most 24 GiB (the heap the 6.4M-doc sf0.1 corpus ran
+    * in on a 128 GiB box; past 32 GiB the JVM loses compressed oops). */
+  def forkHeapBytes(memTotal: Long): Long =
+    math.min(24 * GiB, math.max(GiB, memTotal / 4))
+
+  /** Most documents the corpus may hold: the corpus lives in /dev/shm
+    * (RAM), and it plus one fork heap must fit in half of memory. The
+    * other half is for the parent JVM, the build tool, each pass's
+    * shuffle, sink and checkpoint files, and the page cache. The fork
+    * heap must also hold the corpus's stitch state. */
+  def corpusCapDocs(memTotal: Long): Long = {
+    val heap = forkHeapBytes(memTotal)
+    math.min(math.max(0L, memTotal / 2 - heap) / CorpusBytesPerDoc, heap / HeapBytesPerDoc)
+  }
+
+  /** Corpus size for a scale factor: large enough that compute
+    * dominates the per-pass fixed cost (query planning, state-store
+    * opens, a few seconds) at that scale's usual core count. */
+  def sfDocs(sfDir: String): Long = TokenEngine.scaleOf(sfDir) match {
+    case s if s >= 0.1  => 6400000L
+    case s if s >= 0.01 => 200000L
+    case _              => 20000L
+  }
+
+  // ---- verdict ----------------------------------------------------
+
+  /** One timed pass: sink rows over the streaming run's wall time;
+    * `verified` when the sink holds exactly the expected row count. */
+  final case class Attempt(rate: Double, wall: Double, rows: Long, verified: Boolean, stealPct: Double)
+
+  /** A level's attempts, or why it has none (fork died, timed out or
+    * printed no result). */
+  final case class Level(cpus: Int, attempts: Seq[Attempt], error: Option[String] = None)
+
+  final case class Spread(median: Double, min: Double, max: Double)
+
+  final case class Verdict(
+      n: Spread, n4: Spread, effRaw: Double, eff: Double,
+      credible: Boolean, verified: Boolean, error: Option[String]) {
+    def truncated: Boolean = error.nonEmpty
+  }
+
+  private def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    if (s.isEmpty) 0.0
+    else if (s.length % 2 == 1) s(s.length / 2)
+    else (s(s.length / 2 - 1) + s(s.length / 2)) / 2
+  }
+
+  /** Rates of the verified attempts only: an attempt whose sink is
+    * wrong measured something other than the pipeline. */
+  private def spread(l: Level): Spread = {
+    val r = l.attempts.filter(_.verified).map(_.rate)
+    if (r.isEmpty) Spread(0.0, 0.0, 0.0) else Spread(median(r), r.min, r.max)
+  }
+
+  /** The pair's verdict. A dead level, or one without a verified
+    * non-zero rate, gives no ratio at all: credible:false with an
+    * error, never a ratio built from zeros. */
+  def verdict(n: Level, n4: Level): Verdict = {
+    val (sn, s4) = (spread(n), spread(n4))
+    val errors = Seq(n4 -> s4, n -> sn).flatMap { case (l, s) =>
+      l.error.orElse(if (s.median > 0) None else Some("no verified attempt with a non-zero rate"))
+        .map(e => s"level ${l.cpus}: $e")
+    }
+    val error = if (errors.isEmpty) None else Some(errors.mkString("; "))
+    val raw = if (sn.median > 0) s4.median / (4 * sn.median) else 0.0
+    val credible = error.isEmpty && raw <= SuperlinearTolerance
+    Verdict(sn, s4, raw, if (credible) math.min(raw, 1.0) else 0.0, credible,
+      verified = error.isEmpty && (n.attempts ++ n4.attempts).forall(_.verified), error)
+  }
+
+  // ---- engine runs ------------------------------------------------
+
   /** All benchmark I/O (input, shuffle, checkpoint, sink) goes to
-    * tmpfs: this box has ONE shared disk, so 32 concurrent state-
-    * commit fsyncs + sink writes + shuffle spills queue behind each
-    * other and masquerade as anti-scaling — an artifact a real
-    * multi-executor cluster (one local disk per executor) does not
-    * have. RAM-backed dirs measure the engine, not /dev/vda. */
-  private val ioRoot: java.nio.file.Path = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val base = if (Files.isWritable(shm)) shm else java.nio.file.Paths.get("/tmp")
+    * tmpfs when there is one: a single shared disk queues concurrent
+    * state-commit fsyncs, sink writes and shuffle spills behind each
+    * other and shows up as anti-scaling that a real multi-executor
+    * cluster (one local disk per executor) does not have. */
+  private lazy val ioRoot: Path = {
+    val shm = Paths.get("/dev/shm")
+    val base = if (Files.isWritable(shm)) shm else Paths.get(System.getProperty("java.io.tmpdir"))
     Files.createDirectories(base.resolve("graft-bench"))
   }
 
@@ -52,39 +172,33 @@ object Bench {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.adaptive.enabled", "true")
-      // the fragment corpus is ~hundreds of MB; the default 128 MB
-      // maxPartitionBytes would collapse the streaming scan into a
-      // couple of tasks and serialize the ingest regardless of cores
+      // the default 128 MB maxPartitionBytes would collapse the
+      // streaming scan of a few-hundred-MB corpus into a couple of
+      // tasks and serialize the ingest regardless of cores
       .config("spark.sql.files.maxPartitionBytes", (8 * 1024 * 1024).toString)
+      // the in-memory provider: at this state size it is faster than
+      // RocksDB and needs no native library
       .config("spark.sql.streaming.stateStore.providerClass",
-        sys.env.getOrElse("SPARK_GRAFT_STATE_STORE",
-          "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"))
-      // maintenance (full-state snapshot upload) overlapping a short
-      // measured run distorts it badly; deltas alone are correct, so
-      // push snapshots beyond the benchmark window
-      .config("spark.sql.streaming.stateStore.maintenanceInterval",
-        sys.env.getOrElse("SPARK_GRAFT_MAINT_INTERVAL", "3600s"))
-      .config("spark.sql.streaming.stateStore.minDeltasForSnapshot",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_DELTAS", "1000"))
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
+        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
+      // a full-state snapshot upload overlapping a short measured pass
+      // distorts it; deltas alone are correct, so push snapshots past
+      // the end of the run
+      .config("spark.sql.streaming.stateStore.maintenanceInterval", "3600s")
+      .config("spark.sql.streaming.stateStore.minDeltasForSnapshot", "1000")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
 
-  /** Streaming throughput at one parallelism level: fixed fragment
-    * corpus through the full pipeline; rate = extracted rows /
-    * wall-sec of the streaming runs (input synthesis excluded). */
-  private def rmTree(p: java.nio.file.Path): Unit =
+  private def rmTree(p: Path): Unit =
     if (Files.exists(p)) {
       Files.walk(p).sorted(java.util.Comparator.reverseOrder())
         .forEach(f => Files.deleteIfExists(f))
     }
 
   /** (steal, total) jiffies from /proc/stat line 1 — sampled around
-    * each attempt so host CPU-steal interference is RECORDED in the
-    * artifact, not just described (the box shows 4× swings between
-    * identical runs; see BASELINE.md). */
+    * each timed section so host CPU-steal interference is recorded in
+    * the artifact, not just described. */
   private def cpuJiffies(): (Long, Long) =
     try {
       val src = scala.io.Source.fromFile("/proc/stat")
@@ -94,178 +208,38 @@ object Bench {
       } finally src.close()
     } catch { case _: Throwable => (0L, 0L) }
 
-  /** One attempt's evidence row. */
-  final case class Attempt(rate: Double, wall: Double, stealPct: Double, memBwGBs: Double)
-
-  /** Single-thread sequential-read DRAM-bandwidth probe (GB/s over a
-    * 256 MB sweep; first pass warms pages, second is timed). Host-side
-    * memory contention is invisible to guest steal accounting yet
-    * craters this workload — measured on this box: aggregate ceiling
-    * ~12 GB/s (flat from 4 to 16 threads, ~7 GB/s single-thread) in a
-    * quiet window, and a >10× collapse during one degraded window that
-    * showed steal of only 2-4%. Sampling it per attempt turns "the box
-    * was noisy" from an assertion into artifact evidence. */
-  private lazy val bwArr = new Array[Long](32 * 1024 * 1024)
-  private def memBwProbe(): Double = {
-    var s = 0L
-    var pass = 0
-    var dt = 0.0
-    while (pass < 2) {
-      val t0 = System.nanoTime()
-      var i = 0
-      while (i < bwArr.length) { s += bwArr(i); i += 1 }
-      dt = (System.nanoTime() - t0) / 1e9
-      pass += 1
-    }
-    if (s == 42L) System.err.print("") // defeat dead-code elimination
-    0.25 / dt // array is 256 MB = 0.25 GB
+  private def stealPctSince(start: (Long, Long)): Double = {
+    val (s1, t1) = cpuJiffies()
+    if (t1 > start._2) 100.0 * (s1 - start._1) / (t1 - start._2) else 0.0
   }
 
-  /** Self-enforced TOTAL wall budget, measured from `main()` entry
-    * (object init is the first statement main touches). Three rounds
-    * of driver benches produced exactly one parsed artifact (r1,
-    * 1281 s): r2 died to an OOM the fork caps have since fixed, and
-    * r3 to the driver's wall clock — the methodology machinery (gate
-    * sleeps, 3-4 attempts/level, extra + halved fallback pairs) ran
-    * long past the driver's patience. Everything time-shaped below
-    * (gate budget, measured attempts, extra pairs, fallback pairs)
-    * now derives from what remains of THIS budget, and the final JSON
-    * always prints as the last line with exit 0 — a self-truncated
-    * run with one honest pair beats a methodologically perfect
-    * rc=124 (round-3 verdict). */
-  private val wallT0 = System.nanoTime()
-  private val wallBudget = sys.env.getOrElse("SPARK_GRAFT_WALL_BUDGET", "1200").toLong
-  private def elapsedSec: Long = (System.nanoTime() - wallT0) / 1000000000L
-  private def remainingSec: Long = wallBudget - elapsedSec
-
-  /** Bounded quiet-window gate. This host's DRAM throttling drifts on
-    * a minutes scale (probe ~7 GB/s quiet, 2-3 GB/s degraded — see
-    * BASELINE.md) and a level measured in a degraded window is
-    * incomparable with one measured quiet: one recorded full run
-    * produced per-pair ratios of 0.224 and 1.111 back-to-back, both
-    * measurement artifacts of the window, not the engine. Before each
-    * measured section, wait (bounded by a SHARED budget across the
-    * whole run) until the probe clears `SPARK_GRAFT_MEMBW_GATE`
-    * (default 4.0 GB/s — between the degraded and quiet plateaus).
-    * The gate never discards data — it only chooses WHEN to start
-    * measuring; the final probe reading and the seconds waited ride
-    * in the artifact so a run that had to proceed degraded is visible
-    * as such. Returns (lastProbeGBs, waitedSec).
-    *
-    * Known gap (accepted): the probe runs in the parent, but a forked
-    * level's measured attempt starts tens of seconds later (fork +
-    * Spark startup + warmup pass), so a cleared window can lapse
-    * before measurement. The per-ATTEMPT membw/steal recorded by the
-    * child inside the fork is the ground truth for what the attempt
-    * actually saw; the gate only biases WHEN measurement starts.
-    *
-    * Total gate spend is capped at an eighth of the WALL budget (r3
-    * post-mortem: the fixed 600 s gate budget alone consumed most of
-    * the driver's clock; in a PERMANENTLY throttled window — every
-    * probe of a whole round-4 day read 2.0-2.8 GB/s — each gate burns
-    * its full cap for nothing, so the caps must be cheap relative to
-    * the measurements they protect). */
-  private val gateGBs = sys.env.getOrElse("SPARK_GRAFT_MEMBW_GATE", "4.0").toDouble
-  private val gateBudgetTotal = math.min(
-    sys.env.getOrElse("SPARK_GRAFT_QUIET_WAIT", "600").toLong, wallBudget / 8)
-  private val gateBudget = new java.util.concurrent.atomic.AtomicLong(gateBudgetTotal)
-  /** Per-gate slices scale with the budget in BOTH directions: pure
-    * fractions of the total (no large floors), so the first one or
-    * two degraded gates cannot drain the whole budget and leave every
-    * later level gate with 0 s — at the 600 s default a level gate
-    * waits ≤150 s and the query gate ≤50 s, spreading the budget over
-    * the 4-6 gates of a default run. (The r3 default run showed the
-    * failure mode of floored caps: queries 180 s + pair1-4n 420 s
-    * drained the budget, then pair1-n gated at membw 1.3 GB/s with
-    * 0 s left — exactly the N-more-throttled pairing the gate exists
-    * to prevent.) */
-  private val levelGateCap = math.max(30L, gateBudgetTotal / 4)
-  private val queryGateCap = math.max(30L, gateBudgetTotal / 12)
-  /** `maxThisGate` caps ONE gate's draw on the shared budget: the
-    * per-query gate gets a small slice (min-of-3 already reads through
-    * per-query noise) so a long degraded stretch cannot starve the
-    * pair gates, where window-matching is what the number MEANS. */
-  private def quietGate(tag: String, maxThisGate: Long = Long.MaxValue): (Double, Long) = {
-    var bw = memBwProbe()
-    var waited = 0L
-    while (bw < gateGBs && gateBudget.get() > 0 && waited < maxThisGate) {
-      val step = math.min(30L, math.min(gateBudget.get(), maxThisGate - waited))
-      gateBudget.addAndGet(-step)
-      waited += step
-      Thread.sleep(step * 1000)
-      bw = memBwProbe()
-    }
-    if (waited > 0 || bw < gateGBs)
-      System.err.println(f"[bench gate $tag] membw=$bw%.1fGB/s waited=${waited}s " +
-        f"(gate=$gateGBs%.1f, budget_left=${gateBudget.get()}s)")
-    (bw, waited)
-  }
-
-  /** Tranche count from the env, clamped to a divisor of 8 so the
-    * one-tranche-per-micro-batch alignment between [[synthesize]]'s
-    * file layout and [[filesPerBatch]] always holds (a raw 0 would
-    * divide by zero; 3 or 5 would misalign batch boundaries and make
-    * watermark-dropped rows look like an engine bug). */
-  private def tranchesEnv: Int = {
-    val raw = sys.env.getOrElse("SPARK_GRAFT_TRANCHES", "1").toInt
-    val t = Seq(8, 4, 2, 1).find(_ <= math.min(8, math.max(1, raw))).get
-    if (t != raw)
-      System.err.println(s"[bench] SPARK_GRAFT_TRANCHES=$raw remapped to $t (must divide 8)")
-    t
-  }
-
-  /** Files per micro-batch for a given layout parallelism (the 4N
-    * level by default — both levels read the same layout). */
-  private def filesPerBatch(layoutCpus: Int): Int =
-    math.max(1, layoutCpus / 4) * (8 / tranchesEnv)
-
-  /** Warmup-corpus size: 1/16 of the measured corpus (floor 20k docs,
-    * but never larger than the measured corpus itself — a 5k-doc
-    * debug run must not warm on 20k) — enough full-pipeline passes to
-    * reach C2-compiled steady state, small enough that the untimed
-    * warmup costs seconds, not the 200+ s a cold full pass costs. */
-  private def warmDocsOf(streamDocs: Long): Long =
-    math.min(streamDocs, math.max(20000L, streamDocs / 16))
+  /** The small corpus a level warms up on, beside the measured one
+    * (its own directory: the level's glob over `inDir` must not see it). */
+  private def warmDirOf(inDir: String): String =
+    Paths.get(inDir).resolveSibling("warm").toString
 
   /**
-   * Synthesize the deterministic fragment corpus + flush files into
-   * `inDir` and return the expected extracted-row count (narrow, via
-   * StreamJob.expectedRows). Synthesis is identical for every level —
-   * the parent runs it ONCE at full parallelism and both forked levels
-   * read the shared files; at 12.8M docs the per-child re-synthesis
-   * (generate + cache + write ~10 GB parquet) used to dominate the
-   * bench wall, 4× worse at the N level.
+   * Write the deterministic fragment corpus to `inDir` and return the
+   * extracted-row count the pipeline must produce (narrow, via
+   * StreamJob.expectedRows). Layout: the corpus as `files` parquet
+   * files in `p1`, then two flush rows in `p2` and `p3` with strictly
+   * later mtimes — the file source processes oldest-first, so the
+   * corpus is one micro-batch and the flushes advance the watermark
+   * past every session timer without a query restart.
    */
-  private def synthesize(
-      spark: SparkSession, nDocs: Long, inDir: String, layoutCpus: Int): Long = {
+  private def synthesize(spark: SparkSession, nDocs: Long, inDir: String, files: Int): Long = {
     import spark.implicits._
-    val spec = TokenEngine.flagshipSpec
     val all = TokenGen.fragments(spark, nDocs).filter(!_.is_late).cache()
-    val expected = StreamJob.expectedRows(all, spec)
+    val expected = StreamJob.expectedRows(all, TokenEngine.flagshipSpec)
     // flushes must sit strictly AFTER the corpus's event-time range
-    // (they exist to advance the watermark past every session timer)
     val flushTs = TokenGen.BASE_EPOCH_MS + nDocs * 1000L + 3600000L
-    def flush(tag: String, off: Long, dir: String): Unit = {
+    def flush(tag: String, off: Long, dir: String): Unit =
       Seq(graft.gen.Fragment(
         s"~$tag", Array(2), 1, "flush",
         new java.sql.Timestamp(flushTs + off), 0, 0, false, false))
         .toDS().coalesce(1).write.parquet(dir)
-    }
-    // event-time-ordered tranches with strictly increasing file
-    // mtimes: tranche t = one micro-batch. Order matters: a plain
-    // repartition would scramble event times across files, and any
-    // file processed after the watermark passed its rows would
-    // (correctly) drop them as late.
-    val tranches = tranchesEnv
-    val spanMs = nDocs * 1000L / tranches
-    for (t <- 0 until tranches) {
-      val lo = TokenGen.BASE_EPOCH_MS + t * spanMs
-      val hi = if (t == tranches - 1) Long.MaxValue else lo + spanMs
-      all.filter(f => f.event_time.getTime >= lo && f.event_time.getTime < hi)
-        .repartition(filesPerBatch(layoutCpus))
-        .write.mode("overwrite").parquet(f"$inDir/p1_$t%02d")
-      Thread.sleep(1200)
-    }
+    all.repartition(files).write.parquet(s"$inDir/p1")
+    Thread.sleep(1200) // mtime granularity: keep the three batches ordered
     flush("f1", 0, s"$inDir/p2")
     Thread.sleep(1200)
     flush("f2", 600000L, s"$inDir/p3")
@@ -273,967 +247,242 @@ object Bench {
     expected
   }
 
-  private def streamRun(cpus: Int, nDocs: Long): (Double, Long, Boolean, Seq[Attempt], Long) = {
+  /** Synthesis-fork body: the measured corpus (two files per 4N
+    * thread) and a warm-up corpus of 1/16 of it, floor 20k docs — enough
+    * full-pipeline passes to reach C2-compiled steady state in seconds
+    * rather than paying a cold full-size pass. */
+  private def synthMain(cpus: Int, inDir: String, docs: Long): Unit = {
     val spark = session(cpus)
-    if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG")) {
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val i = sc.stageInfo
-          val wall = for {
-            s <- i.submissionTime; c <- i.completionTime
-          } yield c - s
-          System.err.println(f"[stage cpus=$cpus] id=${i.stageId} tasks=${i.numTasks} " +
-            f"wall=${wall.getOrElse(-1L)}ms taskSum=${i.taskMetrics.executorRunTime}ms " +
-            f"cpuSum=${i.taskMetrics.executorCpuTime / 1000000}ms " +
-            f"ser=${i.taskMetrics.resultSerializationTime}ms " +
-            f"name=${i.name.take(60)}")
-        }
-      })
-    }
-    var baseDir: java.nio.file.Path = null
+    val expected =
+      try {
+        val files = 2 * levels(cpus)._2
+        val e = synthesize(spark, docs, inDir, files)
+        synthesize(spark, math.min(docs, math.max(20000L, docs / 16)), warmDirOf(inDir), files)
+        e
+      } finally spark.stop()
+    println(s"BENCHSYNTH $expected")
+  }
+
+  /** Level-fork body: one untimed warm pass, then [[Attempts]] timed
+    * passes over the same corpus, each with a fresh checkpoint and
+    * sink. The timed window is the streaming run only; the sink count
+    * that verifies it is read afterwards. */
+  private def levelMain(cpus: Int, inDir: String, expected: Long): Unit = {
+    val spark = session(cpus)
+    val base = Files.createTempDirectory(ioRoot, s"level-$cpus-")
     try {
-      val base = Files.createTempDirectory(ioRoot, s"run-$cpus-")
-      baseDir = base
-      val spec = TokenEngine.flagshipSpec
-
-      // one query run, micro-batch order by file mtime: main corpus
-      // first, then two flush rows with strictly later mtimes (the
-      // file source processes oldest-first when mtimes differ) — the
-      // flushes advance the watermark and fire every session timer
-      // without paying a per-run state-store reopen (3 query restarts
-      // × per-partition RocksDB opens previously dominated the wall
-      // and inverted the scaling curve)
-      // 3 attempts by default: attempt 1 is reliably a JIT/page-cache
-      // warmup; warm attempts agree within ±5% on a quiet box (the
-      // attempt evidence rides in the JSON); raise via
-      // SPARK_GRAFT_ATTEMPTS under ambient load
-      val attempts = sys.env.getOrElse("SPARK_GRAFT_ATTEMPTS", "3").toInt
-      // shared-input mode (forked level under the parent): input files
-      // + expected count arrive via env, nothing to synthesize here;
-      // standalone mode (SPARK_GRAFT_ONLY by hand): self-synthesize
-      val (inDir, expected, mfpt) = sys.env.get("SPARK_GRAFT_INDIR") match {
-        case Some(shared) =>
-          (shared,
-            sys.env("SPARK_GRAFT_EXPECTED").toLong,
-            sys.env.getOrElse("SPARK_GRAFT_MFPT", filesPerBatch(cpus).toString).toInt)
-        case None =>
-          val own = base.resolve("in").toString
-          val e = synthesize(spark, nDocs, own, layoutCpus = cpus)
-          (own, e, filesPerBatch(cpus))
-      }
-
-      // Untimed warmup pass over the small warmup corpus (synthesized
-      // by the parent's synth fork at ~1/16 of the docs): a fresh JVM's
-      // first pass through the full pipeline is JIT + classloading, not
-      // engine throughput — r3 cold attempts ran 235-253 s against
-      // 31-123 s warm, and paying that cold pass on the FULL corpus at
-      // every level is most of what blew the driver's wall clock.
-      // Warming on a small corpus compiles the same code paths for a
-      // few seconds instead. The measured attempts below then start
-      // warm (attempt evidence unchanged: every measured attempt still
-      // records rate/wall/steal/membw).
-      sys.env.get("SPARK_GRAFT_WARM_INDIR").foreach { warmDir =>
-        val tw0 = System.nanoTime()
-        val tableW = new ResultTable(base.resolve("table-warm").toString)
-        val qw = StreamJob.run(
-          StreamJob.fileSource(spark, s"$warmDir/*", maxFilesPerTrigger = mfpt),
-          spec, tableW, base.resolve("ck-warm").toString, s"warm$cpus",
-          watermarkDelay = "10 minutes", sessionGapMs = 60000L,
-          trigger = Trigger.AvailableNow())
-        qw.awaitTermination()
-        // also warm the sink read-back + count path the rate uses
-        if (tableW.snapshots().nonEmpty)
-          tableW.read(spark).filter(!col("doc_id").startsWith("~")).count()
-        rmTree(base.resolve("table-warm"))
-        rmTree(base.resolve("ck-warm"))
-        System.err.println(
-          f"[bench cpus=$cpus warmup] wall=${(System.nanoTime() - tw0) / 1e9}%.1fs")
-      }
-
-      // Measure `attempts` runs over the SAME input (fresh checkpoint
-      // + sink each time) and keep the best: this VM sees intermittent
-      // host-level CPU steal (observed via /proc/stat during runs)
-      // that can triple a run's wall; best-of-K reads through the
-      // noise. Input synthesis is excluded from the timed window.
-      var best = (0.0, 0L, false)
-      val attemptLog = scala.collection.mutable.ArrayBuffer.empty[Attempt]
-      for (attempt <- 1 to attempts) {
-        val ck = base.resolve(s"ck$attempt").toString
-        val table = new ResultTable(base.resolve(s"table$attempt").toString)
-        val bw = memBwProbe()
-        val (steal0, total0) = cpuJiffies()
+      /** (sink rows, wall seconds) of one pass over `dir`. */
+      def pass(tag: String, dir: String): (Long, Double) = {
+        val table = new ResultTable(base.resolve(s"table-$tag").toString)
+        // one micro-batch for the whole corpus (see synthesize)
+        val files = scala.util.Using.resource(Files.list(Paths.get(dir, "p1")))(
+          _.filter(_.toString.endsWith(".parquet")).count().toInt)
         val t0 = System.nanoTime()
         val q = StreamJob.run(
-          StreamJob.fileSource(spark, s"$inDir/*", maxFilesPerTrigger = mfpt),
-          spec, table, ck, s"bench$cpus",
+          StreamJob.fileSource(spark, s"$dir/*", maxFilesPerTrigger = files),
+          TokenEngine.flagshipSpec, table, base.resolve(s"ck-$tag").toString, s"bench$cpus",
           watermarkDelay = "10 minutes", sessionGapMs = 60000L,
           trigger = Trigger.AvailableNow())
         q.awaitTermination()
         val wall = (System.nanoTime() - t0) / 1e9
-        val (steal1, total1) = cpuJiffies()
-        val stealPct =
-          if (total1 > total0) 100.0 * (steal1 - steal0) / (total1 - total0) else 0.0
-        if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG")) {
-          q.recentProgress.foreach { p =>
-            System.err.println(s"[bench-debug cpus=$cpus a=$attempt] batch=${p.batchId} " +
-              s"rows=${p.numInputRows} durations=${p.durationMs} " +
-              s"state=${p.stateOperators.map(s => s"(rows=${s.numRowsTotal} commit=${s.commitTimeMs}ms)").mkString}")
-          }
-        }
-        // empty commit log → schema-less emptyDataFrame, where the
-        // doc_id filter would throw and kill the fork without a
-        // BENCHRATE line; record rows=0 instead (verified=false)
+        val stateMb = q.recentProgress.flatMap(_.stateOperators.map(_.memoryUsedBytes))
+          .maxOption.getOrElse(0L) >> 20
+        // an empty commit log reads as a schema-less DataFrame where
+        // the doc_id filter would throw: that pass produced 0 rows
         val rows =
           if (table.snapshots().isEmpty) 0L
           else table.read(spark).filter(!col("doc_id").startsWith("~")).count()
-        val rate = rows / wall
-        // tmpfs is RAM: drop this attempt's sink + checkpoint NOW —
-        // letting K attempts' sinks accumulate at large corpora
-        // pressures the page cache into the OOM killer
-        rmTree(base.resolve(s"table$attempt"))
-        rmTree(base.resolve(s"ck$attempt"))
-        attemptLog += Attempt(rate, wall, stealPct, bw)
-        System.err.println(
-          f"[bench cpus=$cpus attempt=$attempt] rate=$rate%.1f rows=$rows wall=$wall%.1fs steal=$stealPct%.1f%% membw=$bw%.1fGB/s")
-        if (rate > best._1) best = (rate, rows, rows == expected)
+        // tmpfs is RAM: drop each pass's sink and checkpoint at once
+        rmTree(base.resolve(s"table-$tag"))
+        rmTree(base.resolve(s"ck-$tag"))
+        System.err.println(f"[bench cpus=$cpus $tag] rate=${rows / wall}%.1f " +
+          f"rows=$rows wall=$wall%.1fs state_mb=$stateMb")
+        (rows, wall)
       }
-      (best._1, best._2, best._3, attemptLog.toSeq, expected)
+      pass("warm", warmDirOf(inDir))
+      val attempts = (1 to Attempts).map { a =>
+        val jiffies = cpuJiffies()
+        val (rows, wall) = pass(s"attempt$a", inDir)
+        s"${rows / wall},$wall,$rows,${stealPctSince(jiffies)}"
+      }
+      println(s"BENCHRATE ${attempts.mkString(";")}")
     } finally {
       spark.stop()
-      if (baseDir != null) rmTree(baseDir) // tmpfs is RAM — clean up
+      rmTree(base)
     }
   }
 
-  /** Re-invoke this main in a fresh JVM with `env` set; returns its
-    * stdout. The parent may run under a driver-sized heap (r2
-    * post-mortem: an inherited ~90 GiB -Xmx in BOTH live JVMs + the
-    * tmpfs corpus OOM-killed the round's artifact on a 128 GiB box) —
-    * strip any inherited heap flags and pin every fork to a modest
-    * explicit heap; a level run needs working memory for local[16]
-    * shuffles + an in-memory state store, which 24g covers at the
-    * default corpus (synthesis spills its cache past the cap to
-    * MEMORY_AND_DISK, so it is bounded too). */
-  private def forkSelf(env: Map[String, String], pretouch: Boolean = false): String = {
-    val javaBin = java.nio.file.Paths.get(
-      System.getProperty("java.home"), "bin", "java").toString
-    val jvmArgs = java.lang.management.ManagementFactory
-      .getRuntimeMXBean.getInputArguments.stream()
-      .filter(a => !a.startsWith("-Xmx") && !a.startsWith("-Xms")
-        && !a.startsWith("-XX:MaxRAMPercentage") && !a.startsWith("-XX:InitialRAMPercentage"))
-      .collect(java.util.stream.Collectors.toList[String])
-    val cmd = new java.util.ArrayList[String]()
-    cmd.add(javaBin)
-    cmd.addAll(jvmArgs)
-    val heap = sys.env.getOrElse("SPARK_GRAFT_FORK_HEAP", "24g")
-    cmd.add("-Xmx" + heap)
-    // Pre-size AND pre-touch MEASURED forks only: a fork that grows
-    // its heap lazily pays page faults + GC-expansion thrash INSIDE
-    // the measured window — the small-corpus JIT warmup cannot absorb
-    // it because the cost scales with the full corpus's live set
-    // (measured on this box: a JIT-warmed first full pass ran 141 s
-    // vs 53 s with a pre-touched heap, same throttled window).
-    // AlwaysPreTouch moves the whole fault cost to JVM start, before
-    // any measurement; the synth fork skips it (nothing measured
-    // there, and zeroing 24 GB under the host's DRAM throttle is
-    // tens of wall seconds for nothing).
-    if (pretouch) {
-      cmd.add("-Xms" + heap)
-      cmd.add("-XX:+AlwaysPreTouch")
-    }
-    cmd.add("-cp"); cmd.add(System.getProperty("java.class.path"))
-    cmd.add("graft.Bench")
-    val pb = new ProcessBuilder(cmd)
-    env.foreach { case (k, v) => pb.environment().put(k, v) }
-    pb.redirectErrorStream(false)
-    pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-    val p = pb.start()
-    val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
-    p.waitFor()
-    out
+  /** Run this main in a fresh JVM with `args` and a `heap`-sized heap;
+    * its stdout, or None when it failed, printed nothing or ran past
+    * [[ForkTimeoutSec]]. The parent's own heap flags are dropped: the
+    * parent is sized for the query phase, the fork from the box. */
+  private def fork(args: Seq[String], heap: Long): Option[String] = {
+    val javaBin = Paths.get(System.getProperty("java.home"), "bin", "java").toString
+    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.toArray(Array.empty[String]).toSeq
+      .filterNot(a => Seq("-Xmx", "-Xms", "-XX:MaxRAMPercentage", "-XX:InitialRAMPercentage")
+        .exists(a.startsWith))
+    val heapMb = heap >> 20
+    // a fixed-size heap: a pass must not pay for growing it
+    val cmd = Seq(javaBin) ++ jvmArgs ++ Seq(s"-Xms${heapMb}m", s"-Xmx${heapMb}m",
+      "-cp", System.getProperty("java.class.path"), "graft.Bench") ++ args
+    val out = Files.createTempFile(ioRoot, "fork-", ".out")
+    try {
+      val p = new ProcessBuilder(cmd: _*)
+        .redirectOutput(out.toFile)
+        .redirectError(ProcessBuilder.Redirect.INHERIT)
+        .start()
+      if (!p.waitFor(ForkTimeoutSec, TimeUnit.SECONDS)) {
+        System.err.println(s"[bench] fork ${args.mkString(" ")} timed out after ${ForkTimeoutSec}s")
+        p.destroyForcibly().waitFor()
+        None
+      } else if (p.exitValue() != 0) {
+        System.err.println(s"[bench] fork ${args.mkString(" ")} exited with ${p.exitValue()}")
+        None
+      } else Some(Files.readString(out))
+    } finally Files.deleteIfExists(out)
   }
 
-  /** Synthesize the shared corpus in a forked capped-heap JVM (the
-    * r2 OOM's other half: synthesis in the big-heap parent left a
-    * corpus-sized RSS alive for the whole stream phase); parse the
-    * expected-rows count from its BENCHSYNTH line. */
-  private def forkSynth(inDir: String, docs: Long, layoutCpus: Int, synthCpus: Int): Long = {
-    val warmDir = java.nio.file.Paths.get(inDir).resolveSibling("warm").toString
-    def once(): Option[Long] =
-      forkSelf(Map(
-        "SPARK_GRAFT_SYNTH_DIR" -> inDir,
-        "SPARK_GRAFT_SYNTH_WARM" -> warmDir,
-        "SPARK_GRAFT_STREAM_DOCS" -> docs.toString,
-        "SPARK_GRAFT_SYNTH_LAYOUT" -> layoutCpus.toString,
-        "SPARK_GRAFT_SYNTH_CPUS" -> synthCpus.toString))
-        .linesIterator.find(_.startsWith("BENCHSYNTH "))
-        .map(_.drop("BENCHSYNTH ".length).trim.toLong)
-    // same transient-death insurance as level(): one retry, so a
-    // single OOM-killed synth child doesn't zero the stream phase
-    once().orElse {
-      System.err.println("[bench] retrying dead synth fork")
-      rmTree(java.nio.file.Paths.get(inDir))
-      rmTree(java.nio.file.Paths.get(warmDir))
-      Files.createDirectories(java.nio.file.Paths.get(inDir))
-      once()
-    }.getOrElse(throw new IllegalStateException(
-      "synth fork produced no BENCHSYNTH line after retry"))
-  }
+  private def resultLine(out: Option[String], tag: String): Option[String] =
+    out.flatMap(_.linesIterator.find(_.startsWith(tag + " "))).map(_.drop(tag.length + 1).trim)
 
-  /** Re-invoke this main in a fresh JVM pinned to one parallelism
-    * level; parse its BENCHRATE line. `extraEnv` carries the shared
-    * input dir, expected count and files-per-batch from the parent. */
-  private def forkLevel(cpus: Int, extraEnv: Map[String, String]): (Double, Long, Boolean, String, Long) = {
-    val out = forkSelf(extraEnv ++ Map(
-      "SPARK_GRAFT_ONLY" -> cpus.toString,
-      "SPARK_GRAFT_SKIP_QUERIES" -> "1"), pretouch = true)
-    out.linesIterator.find(_.startsWith("BENCHRATE ")) match {
+  /** One level in its own JVM: a second SparkSession in a used JVM
+    * inherits state-store singletons and threads from the first, and
+    * separate JVMs are what "N and 4N executors" means anyway. */
+  private def runLevel(cpus: Int, inDir: String, expected: Long, heap: Long): Level =
+    resultLine(fork(Seq("level", cpus.toString, inDir, expected.toString), heap), "BENCHRATE") match {
       case Some(line) =>
-        val json = line.drop("BENCHRATE ".length)
-        def field(k: String): String =
-          s""""$k":([^,}\\[]+)""".r.findFirstMatchIn(json).map(_.group(1)).getOrElse("0")
-        val attempts = """"attempts":(\[.*?\])""".r.findFirstMatchIn(json)
-          .map(_.group(1)).getOrElse("[]")
-        (field("rate").toDouble, field("rows").toDouble.toLong, field("ok") == "true",
-          attempts, field("expected").toDouble.toLong)
-      case None =>
-        System.err.println(s"[bench] fork at $cpus produced no BENCHRATE:\n$out")
-        (0.0, 0L, false, "[]", 0L)
+        Level(cpus, line.split(';').toSeq.map { a =>
+          val Array(rate, wall, rows, steal) = a.split(',')
+          Attempt(rate.toDouble, wall.toDouble, rows.toLong, rows.toLong == expected, steal.toDouble)
+        })
+      case _ => Level(cpus, Nil, Some("fork died, timed out or printed no result"))
     }
+
+  // ---- full run ---------------------------------------------------
+
+  private def jsonStr(s: String): String =
+    "\"" + s.replaceAll("[\\\\\"\\n\\r\\t]", " ") + "\""
+
+  /** Per-query min-of-[[QueryReps]] seconds, the queries that threw
+    * (name → exception class), and the `query_env` JSON. */
+  private def runQueries(
+      sfDir: String, cpus: Int): (Seq[(String, Double)], Seq[(String, String)], String) = {
+    val spark = session(cpus)
+    try {
+      val picked = SparkEntry.queries.toSeq.sortBy(_._1)
+      // per-query cache lifecycle, outside the timed window: dedup
+      // queries cache shingle sets and details levels localCheckpoint,
+      // and clearCache covers catalog-cached plans only
+      def clear(): Unit = {
+        spark.catalog.clearCache()
+        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      }
+      // toRdd.count(), not count(): Dataset.count() prunes every column
+      // no filter depends on, so a projection query would skip its
+      // extraction kernels; the compiled plan's rows evaluate them all
+      def runOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame, dir: String)
+          : Either[String, Double] = {
+        val t0 = System.nanoTime()
+        val r =
+          try { fn(spark, dir).queryExecution.toRdd.count(); Right((System.nanoTime() - t0) / 1e9) }
+          catch { case t: Throwable => Left(t.getClass.getName) }
+        clear()
+        r
+      }
+      // untimed warm pass at sf0.001 (a sibling of the measured scale
+      // dir) so rep 1 pays data, not JIT and codegen: the cold first
+      // rep is ~10× the warm one for the short queries
+      val warmSf = Paths.get(sfDir).resolveSibling("sf0.001").toString
+      val tw0 = System.nanoTime()
+      if (Files.isDirectory(Paths.get(warmSf)) &&
+          TokenEngine.scaleOf(sfDir) > TokenEngine.scaleOf(warmSf))
+        picked.foreach { case (_, fn) => runOnce(fn, warmSf) }
+      val warmSec = (System.nanoTime() - tw0) / 1e9
+      val jiffies = cpuJiffies()
+      // min of the reps: ambient host contention swings identical runs
+      // several-fold, and the min is the engine's number; a query that
+      // throws stops at its first failure and reports no time
+      val results = picked.map { case (name, fn) =>
+        name -> (1 to QueryReps).foldLeft[Either[String, Double]](Right(Double.MaxValue)) {
+          (acc, _) => acc.flatMap(best => runOnce(fn, sfDir).map(math.min(best, _)))
+        }
+      }
+      val env = f"""{"reps":$QueryReps,"warm_sec":$warmSec%.1f,"steal_pct":${stealPctSince(jiffies)}%.2f}"""
+      (results.collect { case (n, Right(t)) => n -> t },
+        results.collect { case (n, Left(e)) => n -> e }, env)
+    } finally spark.stop()
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    // default pairing 4 -> 16 threads: both levels sit UNDER this
-    // box's ~1M-rows/s shared-DRAM ceiling (measured: the 32-thread
-    // level plateaus at 0.8-1.0M rows/s across all corpus sizes while
-    // 8 threads keep scaling with compute), so the ratio measures the
-    // ENGINE's scaling rather than the VM's memory-bandwidth wall —
-    // the criterion's "N and 4N cores" with N=4. Override with
-    // SPARK_GRAFT_BASE_CPUS=8 for the full-box pairing; BASELINE.md
-    // records both series with per-attempt steal evidence.
-    val baseCpus = sys.env.getOrElse("SPARK_GRAFT_BASE_CPUS", "4").toInt
-    // sized so the parallel work dominates the per-run fixed costs
-    // (query planning + per-partition RocksDB opens, ~3-5 s): the
-    // scaling-efficiency number is only meaningful when the measured
-    // interval is mostly compute
-    // sized so compute dominates the single-JVM fixed floor (~8-10 s)
-    // AND the whole run fits the driver's memory budget: round 2's
-    // 12.8M-doc default + a ~90 GiB inherited heap in BOTH live JVMs
-    // OOM-killed the artifact on a 128 GiB box. Both contributing
-    // causes are fixed structurally this round (synthesis + levels all
-    // run in forked JVMs with an explicit 24g cap, and the per-query
-    // line prints before the stream phase), so the corpus default is
-    // chosen for wall-budget, not survival: 6.4M docs ≈ 18.8M
-    // extracted rows, enough to amortize the fixed floor at the
-    // default 4→16 pairing (BASELINE.md round-3 series); the 0.884
-    // record configuration (12.8M) stays reachable via
-    // SPARK_GRAFT_STREAM_DOCS
-    val streamDocs = sys.env.get("SPARK_GRAFT_STREAM_DOCS").map(_.toLong)
-      .getOrElse(TokenEngine.scaleOf(sfDir) match {
-        case s if s >= 0.1  => 6400000L
-        case s if s >= 0.01 => 200000L
-        case _              => 20000L
-      })
+  private def fullRun(): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
+      throw new IllegalArgumentException("set SPARK_GRAFT_SF_DIR to a generated sf directory (TESTDATA.md)"))
+    val nproc = Runtime.getRuntime.availableProcessors()
+    val cpus = math.min(nproc, sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(nproc))
+    val memTotal = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.OperatingSystemMXBean].getTotalMemorySize
 
-    // 0. synthesis-fork mode: generate the shared corpus and exit
-    // (invoked by forkSynth so the corpus-sized RSS dies with this JVM)
-    sys.env.get("SPARK_GRAFT_SYNTH_DIR").foreach { dir =>
-      val spark = session(sys.env.getOrElse("SPARK_GRAFT_SYNTH_CPUS", cpus.toString).toInt)
-      val expected =
-        try {
-          val layout = sys.env("SPARK_GRAFT_SYNTH_LAYOUT").toInt
-          val e = synthesize(spark, streamDocs, dir, layoutCpus = layout)
-          // small warmup corpus alongside (own directory — the level
-          // glob reads `$inDir/*` and must not see it): the forked
-          // levels pay their JIT warmup here instead of on a full pass
-          sys.env.get("SPARK_GRAFT_SYNTH_WARM").foreach { warmDir =>
-            synthesize(spark, warmDocsOf(streamDocs), warmDir, layoutCpus = layout)
-          }
-          e
-        } finally spark.stop()
-      println(s"BENCHSYNTH $expected")
-      return
-    }
-
-    // 1. per-query batch timings (driver contract)
-    val (results, queryEnv) = if (sys.env.contains("SPARK_GRAFT_SKIP_QUERIES"))
-      (Seq.empty[(String, Double)], "{}")
-    else {
-      val spark = session(cpus)
-      if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG")) {
-        spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            val i = sc.stageInfo
-            val wall = for { s <- i.submissionTime; c <- i.completionTime } yield c - s
-            System.err.println(f"[qstage] id=${i.stageId} tasks=${i.numTasks} " +
-              f"wall=${wall.getOrElse(-1L)}ms taskSum=${i.taskMetrics.executorRunTime}ms " +
-              f"shufW=${i.taskMetrics.shuffleWriteMetrics.bytesWritten / 1048576}MB " +
-              f"name=${i.name.take(60)}")
-          }
-        })
-      }
-      // comma-separated substring filter for iterating on single queries
-      val nameFilter = sys.env.get("SPARK_GRAFT_QUERY_FILTER")
-        .map(_.split(',').toSeq).getOrElse(Seq.empty)
-      val picked = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) =>
-        nameFilter.isEmpty || nameFilter.exists(n.contains)
-      }
-      // min-of-K per query (K=2 at the default wall budget, 3 with
-      // ≥1500 s in hand): this box's ambient host-side contention
-      // swings identical runs up to ~10× (BASELINE.md — one recorded
-      // window inflated a 0.3 s md5 query to 11 s); the min is the
-      // engine's number, the swing is the machine's. Rep 1 also
-      // absorbs the first-execution JIT/page-cache pass, which alone
-      // is 5-50× the warm cost for the short queries — so the min
-      // effectively reads rep 2+.
-      val reps = sys.env.getOrElse("SPARK_GRAFT_QUERY_REPS",
-        if (wallBudget >= 1500) "3" else "2").toInt
-      // ambient-interference evidence for the per-query section (the
-      // stream section already carries per-attempt steal/membw): DRAM
-      // bandwidth + steal sampled around the whole query block ride in
-      // the JSON as `query_env` so a degraded host window is visible
-      // in the artifact instead of masquerading as a slow engine
-      // Untimed tiny-scale warm pass (same trick as the stream levels'
-      // warmup corpus): run every picked query once at the smallest SF
-      // so rep 1 at the measured SF pays data, not JIT/codegen — the
-      // cold first rep was 300-440 s of the queries phase in throttled
-      // windows (~10× the warm sum), and every second saved here funds
-      // the stream phase's fallback ladder. Skipped when the measured
-      // SF already is the smallest.
-      val warmSfDir = "/root/testdata/sf0.001"
-      if (!sys.env.contains("SPARK_GRAFT_NO_QUERY_WARM") &&
-          java.nio.file.Files.isDirectory(java.nio.file.Paths.get(warmSfDir)) &&
-          TokenEngine.scaleOf(sfDir) > TokenEngine.scaleOf(warmSfDir)) {
-        val tw0 = System.nanoTime()
-        picked.foreach { case (_, fn) =>
-          try fn(spark, warmSfDir).queryExecution.toRdd.count()
-          catch { case _: Throwable => () }
-        }
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        System.err.println(
-          f"[bench query-warm] wall=${(System.nanoTime() - tw0) / 1e9}%.1fs")
-      }
-      val (_, qWaited) = quietGate("queries", maxThisGate = queryGateCap)
-      val bwBefore = memBwProbe()
-      val (qSteal0, qTotal0) = cpuJiffies()
-      val r = picked.map { case (name, fn) =>
-        val times = (1 to reps).map { _ =>
-          val t0 = System.nanoTime()
-          // toRdd.count(), not count(): a Dataset.count() prunes every
-          // column no filter depends on, so a projection query (e.g.
-          // extract_flat's part columns) would measure scan+explode and
-          // skip the extraction kernels entirely. Forcing the compiled
-          // physical plan's rows evaluates every output column.
-          try { fn(spark, sfDir).queryExecution.toRdd.count() }
-          catch { case _: Throwable => -1L }
-          val dt = (System.nanoTime() - t0) / 1e9
-          // per-query cache lifecycle, OUTSIDE the timed window (it is
-          // harness bookkeeping, not query work): dedup queries cache
-          // shingle sets and details levels localCheckpoint; without
-          // this, cached blocks accumulate across the query list
-          // (clearCache covers catalog-cached plans only, not
-          // RDD-level checkpoint blocks)
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
-          dt
-        }
-        name -> times.min
-      }
-      spark.stop()
-      val bwAfter = memBwProbe()
-      val (qSteal1, qTotal1) = cpuJiffies()
-      val qStealPct =
-        if (qTotal1 > qTotal0) 100.0 * (qSteal1 - qSteal0) / (qTotal1 - qTotal0) else 0.0
-      (r, f"""{"reps":$reps,"membw_gbs_before":$bwBefore%.1f,""" +
-        f""""membw_gbs_after":$bwAfter%.1f,"steal_pct":$qStealPct%.2f,"gate_waited_sec":$qWaited}""")
-    }
-
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+    // 1. per-query batch timings
+    val (results, failed, queryEnv) = runQueries(sfDir, cpus)
+    val qs = results.map { case (k, v) => s"${jsonStr(k)}:$v" }.mkString("{", ",", "}")
+    val failedJson = failed.map { case (k, e) => s"""{"query":${jsonStr(k)},"error":${jsonStr(e)}}""" }
+      .mkString("[", ",", "]")
     val total = results.map(_._2).sum
+    val head = s""""value":$total,"unit":"sec","queries":$qs,"failed_queries":$failedJson,""" +
+      s""""query_env":$queryEnv,"sf":${jsonStr(sfDir)}"""
+    // the per-query numbers print before the stream phase so that a run
+    // the stream phase kills still leaves them parseable; a distinct
+    // metric name keeps a first-match reader off this line
+    println(s"""{"metric":"queries_partial",$head,"partial":true}""")
 
-    // 2. streaming throughput at N and 4N threads, same input.
-    // Each level runs in its OWN forked JVM (this main re-invoked
-    // with SPARK_GRAFT_ONLY): a second SparkSession in a used JVM
-    // inherits state-store singletons/threads from the first and
-    // measures garbage — and separate JVMs is what "run via
-    // spark-submit at N and 4N executors" means anyway.
-    if (sys.env.contains("SPARK_GRAFT_SKIP_STREAM")) {
-      println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"query_env":$queryEnv,"sf":"$sfDir"}""")
-      return
-    }
-    // Flush the per-query artifact BEFORE the stream phase: if a
-    // later phase dies (r2: the OOM killer took the whole run and
-    // left rc:1/parsed:null), the round still has a parseable line
-    // with every per-query number. A healthy run prints the full
-    // line (queries + stream) afterwards, superseding this one.
-    // Distinct metric name (ADVICE r3): a first-match consumer must
-    // never confuse this flush with the final "total" artifact.
-    if (results.nonEmpty)
-      println(s"""{"metric":"queries_partial","value":$total,"unit":"sec","queries":$qs,"query_env":$queryEnv,"sf":"$sfDir","partial":true}""")
-    // wall-budget bookkeeping for the artifact: which stages the
-    // self-enforced budget skipped, and any error the stream phase
-    // swallowed (the final JSON must print and exit 0 regardless)
-    var skippedStages: List[String] = Nil
-    var streamError: Option[String] = None
-    // up-front pairing decision evidence (probe + chosen mode) for the
-    // artifact — the round-5 scheduler chooses the pairing BEFORE
-    // spending the budget on a pair the window has already doomed
-    var planJson = "{}"
-    val (rateN, rowsN, okN, attN, rate4N, rows4N, ok4N, att4N, pairsJson, eff, bestCpusN, credibleRun, bestDocs) =
-      sys.env.get("SPARK_GRAFT_ONLY") match {
-        case Some(c) =>
-          val (r, n, ok, att, exp) = streamRun(c.toInt, streamDocs)
-          val attJson = att.map(a =>
-            f"""{"rate":${a.rate}%.1f,"wall":${a.wall}%.1f,"steal_pct":${a.stealPct}%.2f,"membw_gbs":${a.memBwGBs}%.1f}""")
-            .mkString("[", ",", "]")
-          println(s"""BENCHRATE {"rate":$r,"rows":$n,"ok":$ok,"expected":$exp,"attempts":$attJson}""")
-          return
-        case None =>
-          // the shared input is synthesized ONCE, in its own forked
-          // capped-heap JVM; both forked levels read the same files
-          // (per-child re-synthesis used to dominate the bench wall,
-          // and parent-side synthesis left a corpus-sized RSS alive
-          // for the whole stream phase — half of the r2 OOM)
-          final case class PairRec(
-              cpusN: Int,
-              docs: Long,
-              p1: (Double, Long, Boolean, String, Long),
-              p4: (Double, Long, Boolean, String, Long),
-              g1: (Double, Long), g4: (Double, Long)) {
-            def eff: Double = if (p1._1 > 0) p4._1 / p1._1 / 4.0 else 0.0
-          }
-          val pairs = scala.collection.mutable.ArrayBuffer.empty[PairRec]
-          // a pair is CREDIBLE when its ratio is not superlinear
-          // beyond measurement noise: warm attempts on this box agree
-          // within ±5% (see the attempts comment in streamRun), so a
-          // ratio ≤1.05 is near-perfect scaling ± noise — reported as
-          // min(eff, 1.0) — while anything above means the N level
-          // ran more throttled than the 4N level and the pair's ratio
-          // says nothing about the engine (the excluded regime
-          // measures 1.07-1.95 in the archived series; run J read
-          // 1.025 on a pair whose per-attempt membw was stable —
-          // genuine ~1.0 scaling that a 1.02 cap wrongly discarded)
-          def credible(e: Double): Boolean = e <= 1.05
-          def bestEff: Double =
-            pairs.map(_.eff).filter(credible).foldLeft(0.0)(math.max)
-          // ANY failure in the measurement machinery (synth fork dead
-          // after retry, tmpfs full, …) must not zero the round's
-          // artifact: whatever pairs completed are selected below and
-          // the final JSON prints with `error` set, exit 0 (r2 rc=1 /
-          // r3 rc=124 both left parsed:null — never again).
-          var cleanupDirs: List[String] = Nil
-          try {
-            // Corpus cache: the corpus is a pure function of (docs,
-            // files-per-batch, tranches) at a fixed seed, so it is
-            // synthesized ONCE per configuration into a keyed tmpfs
-            // dir and reused by every later run on this boot — the
-            // ~6 min synthesis was the single largest mandatory cost
-            // of a default run (r4 phase timing), and re-deriving a
-            // deterministic fixture per run buys nothing. The fork
-            // writes to a tmp dir; the parent renames it into place
-            // (mtime order — which the file source's batch order
-            // depends on — survives a rename) and records the
-            // expected-row count beside it. Bump the v1 tag in the
-            // key when the generator changes.
-            val mfpt = filesPerBatch(baseCpus * 4)
-            def cacheDirOf(docs: Long): java.nio.file.Path =
-              ioRoot.resolve(s"corpus-v1-d$docs-m$mfpt-t$tranchesEnv")
-            def corpusCached(docs: Long): Boolean =
-              Files.exists(cacheDirOf(docs).resolve("_EXPECTED"))
+    // 2. streaming throughput at N and 4N threads on the same corpus
+    val (n, n4) = levels(cpus)
+    val heap = forkHeapBytes(memTotal)
+    val docs = math.min(sfDocs(sfDir), corpusCapDocs(memTotal))
+    val runDir = Files.createTempDirectory(ioRoot, "run-")
+    val inDir = runDir.resolve("in").toString
+    val (expected, levelN, level4N, skipped) =
+      try {
+        resultLine(fork(Seq("synth", cpus.toString, inDir, docs.toString), heap), "BENCHSYNTH")
+          .map(_.toLong) match {
+          case Some(e) =>
+            val l4 = runLevel(n4, inDir, e, heap)
+            (e, runLevel(n, inDir, e, heap), l4, Nil)
+          case None =>
+            val dead = Some("synthesis fork died, timed out or printed no result")
+            (0L, Level(n, Nil, dead), Level(n4, Nil, dead), Seq("level-4n", "level-n"))
+        }
+      } catch {
+        // the final line must print whatever the stream phase hit
+        case t: Throwable =>
+          val err = Some(t.toString.take(300))
+          (0L, Level(n, Nil, err), Level(n4, Nil, err), Nil)
+      } finally rmTree(runDir)
 
-            // bound the cache before synthesizing a new corpus: tmpfs
-            // is RAM, and unbounded stacking of configurations would
-            // re-create the ambient-memory-pressure regime that
-            // OOM-killed r2. `.tmp-<pid>` stragglers go only when
-            // their owner is DEAD (ADVICE r4: a second run starting
-            // during another run's synthesis must not delete its
-            // in-progress tmp dir); complete corpora are evicted
-            // oldest-first only past a 16 GiB total, skipping any
-            // corpus used within the last 30 min (a live run may be
-            // mid-measurement on it — cache hits re-touch _EXPECTED).
-            def pruneCache(keep: java.nio.file.Path): Unit = {
-              // size/mtime reads race a CONCURRENT run's eviction
-              // (supported scenario) — a vanished entry must read as
-              // 0/old, never abort this run's whole stream phase
-              def size(p: java.nio.file.Path): Long =
-                try scala.util.Using.resource(Files.walk(p))(
-                  _.iterator().asScala.filter(Files.isRegularFile(_))
-                    .map(f => try Files.size(f) catch { case _: java.io.IOException => 0L })
-                    .sum)
-                catch { case _: java.io.IOException | _: java.io.UncheckedIOException => 0L }
-              val (tmps, corpora) = scala.util.Using.resource(Files.list(ioRoot))(
-                _.iterator().asScala.filter { p =>
-                  val n = p.getFileName.toString
-                  (n.startsWith("corpus-v") && p != keep) || n.contains(".tmp-")
-                }.toList).partition(_.getFileName.toString.contains(".tmp-"))
-              def mtimeMs(p: java.nio.file.Path): Long =
-                try Files.getLastModifiedTime(p).toMillis
-                catch { case _: java.io.IOException => Long.MaxValue }
-              def safeRm(p: java.nio.file.Path): Unit =
-                try rmTree(p)
-                catch {
-                  case e @ (_: java.io.IOException | _: java.io.UncheckedIOException) =>
-                    System.err.println(s"[bench] prune of $p lost a race: $e")
-                }
-              tmps.foreach { p =>
-                val owner = """\.tmp-(\d+)$""".r
-                  .findFirstMatchIn(p.getFileName.toString)
-                  .flatMap(m => m.group(1).toLongOption)
-                val ownerAlive = owner.exists(pid => ProcessHandle.of(pid).isPresent)
-                // the mtime fallback applies to parseable pids too: a
-                // recycled pid (dead synth's pid now owned by some
-                // long-lived process) must not pin a dead multi-GB
-                // tmpfs dir forever
-                val stale = mtimeMs(p) < System.currentTimeMillis() - 3600000L
-                if ((!ownerAlive && owner.nonEmpty) || stale) {
-                  System.err.println(s"[bench] removing dead straggler: $p")
-                  safeRm(p)
-                }
-              }
-              def lastUsedMs(p: java.nio.file.Path): Long = {
-                val marker = p.resolve("_EXPECTED")
-                mtimeMs(if (Files.exists(marker)) marker else p)
-              }
-              // walk each tree once; tmp stragglers that survived the
-              // pass above count toward the bound too (a dead dir the
-              // liveness check cannot reclaim yet must not be
-              // invisible to it)
-              val sized = (corpora ++ tmps.filter(Files.exists(_)))
-                .map(p => (p, size(p), lastUsedMs(p)))
-              var total = sized.map(_._2).sum
-              for ((p, sz, used) <- sized.sortBy(_._3)
-                   if total > 16L * 1024 * 1024 * 1024 &&
-                     used < System.currentTimeMillis() - 1800000L) {
-                System.err.println(s"[bench] evicting cached corpus: $p")
-                total -= sz
-                safeRm(p)
-              }
-            }
-
-            /** Corpus for `docs` (cache hit or synth-and-publish);
-              * returns (inDir, warmDir, expectedRows, cacheHit). */
-            def ensureCorpus(docs: Long): (String, String, Long, Boolean) = {
-              val cacheDir = cacheDirOf(docs)
-              val expectedFile = cacheDir.resolve("_EXPECTED")
-              // a cacheDir WITHOUT _EXPECTED is a run killed mid-
-              // finalization (or a pre-fix straggler): stale — remove
-              // it or every later run would fail its rename forever
-              if (Files.exists(cacheDir) && !Files.exists(expectedFile)) {
-                System.err.println(s"[bench] removing stale corpus cache: $cacheDir")
-                rmTree(cacheDir)
-              }
-              if (Files.exists(expectedFile)) {
-                System.err.println(s"[bench] corpus cache hit: $cacheDir")
-                // advisory in-use marker for pruneCache's eviction guard
-                try Files.setLastModifiedTime(expectedFile,
-                  java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
-                catch { case _: java.io.IOException => () }
-                (cacheDir.resolve("in").toString, cacheDir.resolve("warm").toString,
-                  Files.readString(expectedFile).trim.toLong, true)
-              } else {
-                pruneCache(keep = cacheDir)
-                val tmp = ioRoot.resolve(
-                  s"${cacheDir.getFileName}.tmp-${ProcessHandle.current().pid()}")
-                cleanupDirs ::= tmp.toString
-                val e = forkSynth(tmp.resolve("in").toString, docs,
-                  layoutCpus = baseCpus * 4, synthCpus = cpus)
-                // _EXPECTED is written INSIDE tmp before the atomic
-                // move, so the published cacheDir is complete-or-absent
-                // — a kill can never leave a half-finalized cache
-                Files.writeString(tmp.resolve("_EXPECTED"), e.toString)
-                try {
-                  Files.move(tmp, cacheDir,
-                    java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-                  cleanupDirs = cleanupDirs.filterNot(_ == tmp.toString)
-                  (cacheDir.resolve("in").toString, cacheDir.resolve("warm").toString, e, false)
-                } catch {
-                  case _: java.nio.file.FileSystemException
-                      if Files.exists(expectedFile) =>
-                    // another run won the rename race — use its corpus
-                    (cacheDir.resolve("in").toString,
-                      cacheDir.resolve("warm").toString,
-                      Files.readString(expectedFile).trim.toLong, true)
-                }
-              }
-            }
-            // Measured attempts per fork: the small-corpus warmup +
-            // pre-touched heap already pay what attempt 1 used to pay
-            // on a 200+ s cold pass, so 1 attempt is honest — but this
-            // host's DRAM throttle fluctuates minute-to-minute (one r4
-            // 16-thread attempt read 582k rows/s, the next run's 251k,
-            // same plan), so when the corpus cache made the prefix
-            // cheap, spend the saved wall on a second attempt per
-            // level: best-of-2 reads through transient troughs.
-            def attemptsFor(cached: Boolean): Int =
-              sys.env.getOrElse("SPARK_GRAFT_ATTEMPTS",
-                if (cached) "2" else "1").toInt
-            def envFor(inDir: String, warmDir: String, expected: Long,
-                attempts: Int): Map[String, String] = Map(
-              "SPARK_GRAFT_INDIR" -> inDir,
-              "SPARK_GRAFT_WARM_INDIR" -> warmDir,
-              "SPARK_GRAFT_EXPECTED" -> expected.toString,
-              "SPARK_GRAFT_MFPT" -> mfpt.toString,
-              "SPARK_GRAFT_ATTEMPTS" -> attempts.toString)
-            // a transient fork death (e.g. ambient memory pressure
-            // OOM-killing the child JVM) must not zero the round's
-            // artifact — retry a dead level once
-            def level(c: Int, env: Map[String, String]): (Double, Long, Boolean, String, Long) = {
-              val first = forkLevel(c, env)
-              if (first._1 > 0.0) first
-              else { System.err.println(s"[bench] retrying dead fork at $c"); forkLevel(c, env) }
-            }
-            // INTERLEAVED PAIRS: one (4N, N) pair is measured
-            // back-to-back, and the reported efficiency is the best
-            // single pair's ratio. Rationale: this box's host-side
-            // DRAM throttling drifts on a minutes scale (membw probe:
-            // ~7 GB/s quiet, 2-3 GB/s degraded, steal% blind to it) —
-            // a ratio of bests taken ~15 min apart compares different
-            // machines. The pair is the unit that must be internally
-            // consistent, so best-of-K applies to pairs, not to levels
-            // independently. All attempts of all pairs ride in the
-            // JSON; per-pair ratios in `pairs`.
-            val nPairs = sys.env.getOrElse("SPARK_GRAFT_PAIRS", "1").toInt
-            val maxPairs = sys.env.getOrElse("SPARK_GRAFT_MAX_PAIRS",
-              (nPairs + 1).toString).toInt
-            val target = 0.8
-            val halvedOk = baseCpus >= 2 &&
-              !sys.env.contains("SPARK_GRAFT_NO_HALVED_FALLBACK")
-            def measurePair(tag: String, cN: Int, docs: Long,
-                env: Map[String, String], gateCap: Long): PairRec = {
-              // gate each LEVEL, not just the pair: the degraded↔quiet
-              // transition happens on a minutes scale, i.e. between the
-              // two levels of one pair — which is exactly what makes a
-              // pair internally inconsistent. Per-gate cap spreads the
-              // shared budget over the level gates of a default run
-              // instead of letting the first degraded gate drain it.
-              val g4 = quietGate(s"$tag-4n", maxThisGate = gateCap)
-              val p4 = level(cN * 4, env)
-              val g1 = quietGate(s"$tag-n", maxThisGate = gateCap)
-              val p1 = level(cN, env)
-              val rec = PairRec(cN, docs, p1, p4, g1, g4)
-              System.err.println(
-                f"[bench $tag] cpus=($cN,${cN * 4}) docs=$docs rate_4n=${p4._1}%.1f rate_n=${p1._1}%.1f eff=${rec.eff}%.3f")
-              rec
-            }
-
-            // ---- reserve-before-spend cost model (round-4 verdict #1).
-            // The r4 driver run's failure mode: pair 1 + gates consumed
-            // 998/1200 s, and the halved fallback — the configuration
-            // that repeatedly lands a credible ≥0.8 in throttled
-            // windows (runs G/H: 0.963/0.896) — was never reserved for
-            // and never ran. Every stage below is priced BEFORE it
-            // runs, from rates measured across the r3/r4 series: in
-            // the throttled 2-3 GB/s membw band the full pipeline
-            // sustains ≈40k rows/s/core (membw-bound, conservative for
-            // a quiet window where stages only finish sooner), plus
-            // ≈60 s/level fixed cost (fork + 24g pre-touch + warmup)
-            // and the level's gate cap. Synthesis ≈ docs/16k-docs-per-
-            // sec + fork startup (measured ~6 min at 6.4M docs).
-            val rowsPerDoc = 3L // 18,816,964 rows / 6,400,000 docs ≈ 2.94
-            // per-core sustained rate in the throttled band, measured
-            // across the r5 series (1c: 62-75k, 2c: 55-80k, 4c:
-            // 50-64k, 8c: 45-57k, 16c: ~30k rows/s/core): linear
-            // per-core decay floored at the old flat-40k conservative
-            // model — a flat 40k over-priced 1-2-core levels by ~35%
-            // and skipped third ladder rungs that fit (runs L/N
-            // missed rung 3 by 12-30 s against actual costs ~100 s
-            // under the flat estimate)
-            def ratePerCore(c: Int): Long = math.max(40000L, 60000L - 1500L * c)
-            def estPairSec(cN: Int, docs: Long, attempts: Int, gateSec: Long): Long = {
-              val rows = docs * rowsPerDoc
-              def lvl(c: Int) = attempts * rows / (ratePerCore(c) * c) + gateSec + 60L
-              lvl(cN) + lvl(cN * 4)
-            }
-            def estEnsureSec(docs: Long): Long =
-              if (corpusCached(docs)) 0L else 45L + docs / 16000L
-            // estimate-or-measured: once a pair has run, its measured
-            // cost bounds later same-shape stages from below
-            var pairCostSec = 0L
-            def affordable(stage: String, estSec: Long): Boolean = {
-              val need = math.max(estSec, pairCostSec) * 11 / 10
-              val ok = remainingSec > need
-              if (!ok) {
-                skippedStages ::= stage
-                System.err.println(s"[bench budget] skipping $stage " +
-                  s"(remaining=${remainingSec}s < est ~${need}s)")
-              }
-              ok
-            }
-            def timedPair(tag: String, cN: Int, docs: Long,
-                attempts: Option[Int] = None): Unit = {
-              val (in, warm, exp, hit) = ensureCorpus(docs)
-              val t = elapsedSec
-              pairs += measurePair(tag, cN, docs,
-                envFor(in, warm, exp, attempts.getOrElse(attemptsFor(hit))),
-                gateCap = if (cN < baseCpus) 15L else levelGateCap)
-              pairCostSec = math.max(pairCostSec, elapsedSec - t)
-            }
-
-            // ---- halved pairing (cN = baseCpus/2, i.e. 2→8 by
-            // default). Under host DRAM throttling the absolute
-            // ceiling drops ~3×, and once the 4N level is bandwidth-
-            // bound a standard pair's ratio measures the throttle, not
-            // the engine — the same reasoning that picked 4→16 under
-            // the QUIET ~12 GB/s ceiling (see the baseCpus comment /
-            // BASELINE.md). Halving the pairing keeps both levels
-            // under the throttled ceiling; still N vs 4N cores,
-            // recorded per-pair as cpus_n. Docs choice: full corpus
-            // when the budget covers it (strongest number, and the
-            // full-docs corpus is usually the cached one), else a
-            // half-size corpus — the 2-core level is the wall-clock
-            // hog (~480 s at 6.4M docs), and halving the input keeps
-            // the pair compute-dominated (N-level attempts ≈110 s vs
-            // the ~10 s fixed floor) at half the cost. Each pair still
-            // reads ONE shared input at both its levels.
-            val halfDocs = math.max(streamDocs / 2, math.min(streamDocs, 20000L))
-            // quartered pairs need a docs floor: at 400k docs the
-            // 4-core level finishes in ~8.5 s and the ~4 s fixed floor
-            // eats the ratio (measured 138k vs the same window's 216k
-            // at a compute-dominated size) — keep the 4N attempt ≥20 s
-            val quarterDocs = math.max(streamDocs / 4, math.min(streamDocs, 1200000L))
-            def estFallbackSec(cN: Int, docs: Long, attempts: Int): Long =
-              estEnsureSec(docs) + estPairSec(cN, docs, attempts, 15L)
-            def estHalvedSec(docs: Long, attempts: Int): Long =
-              estFallbackSec(baseCpus / 2, docs, attempts)
-            /** One fallback pair at (`cN`, `docs`) if the budget
-              * covers it, degrading to 1 attempt/level as the last
-              * affordable rung (noisier — the best-of-2 insurance
-              * goes — but a measured pair beats a skipped one).
-              * Returns whether it ran. */
-            def fallbackPair(tag: String, cN: Int, docs: Long): Boolean = {
-              // fallback pairs prefer best-of-2 per level regardless of
-              // cache state (the cold-corpus=1-attempt default exists
-              // because FULL-corpus synthesis eats the budget; a
-              // reduced-docs pair is short enough that the attempt-2
-              // trough insurance is usually affordable even after a
-              // fresh synth)
-              val att = math.max(attemptsFor(corpusCached(docs)),
-                if (sys.env.contains("SPARK_GRAFT_ATTEMPTS")) 1 else 2)
-              if (remainingSec > estFallbackSec(cN, docs, att) * 11 / 10) {
-                timedPair(tag, cN, docs, attempts = Some(att)); true
-              } else if (att > 1 && remainingSec > estFallbackSec(cN, docs, 1) * 11 / 10) {
-                System.err.println(s"[bench budget] $tag degraded to 1 attempt/level")
-                timedPair(tag, cN, docs, attempts = Some(1)); true
-              } else {
-                skippedStages ::= tag
-                System.err.println(s"[bench budget] skipping $tag " +
-                  s"(remaining=${remainingSec}s < est ~${estFallbackSec(cN, docs, 1) * 11 / 10}s)")
-                false
-              }
-            }
-            var halvedDone = false
-            def tryHalved(): Unit =
-              if (!halvedDone && halvedOk) {
-                halvedDone = true // one shot, whether run or skipped
-                val full = streamDocs
-                val docs =
-                  if (remainingSec > estHalvedSec(full, attemptsFor(corpusCached(full))) * 23 / 20)
-                    full
-                  else halfDocs
-                fallbackPair("pair-halved", baseCpus / 2, docs)
-              }
-            def allThrottled(r: PairRec): Boolean = {
-              def bws(s: String) = """"membw_gbs":([0-9.]+)""".r
-                .findAllMatchIn(s).map(_.group(1).toDouble).toSeq
-              val all = bws(r.p1._4) ++ bws(r.p4._4)
-              all.nonEmpty && all.forall(_ < gateGBs)
-            }
-
-            // ---- pairing decision, UP FRONT (round-4 verdict #1).
-            // The same membw probe the gates use decides the schedule
-            // before the first expensive stage: in a throttled window
-            // the standard pair is the stage with no information (r4
-            // day: standard ratios 0.23-0.76 vs the quiet series'
-            // 0.89-0.99) AND running it first starves the halved
-            // pairing that works there — so the halved pairing runs
-            // FIRST and the standard pair becomes the budget-gated
-            // insurance. In a quiet window the standard pairing is
-            // cheaper and historically lands 0.88-0.99, so it keeps
-            // the lead; extra standard pairs reserve the halved
-            // fallback's estimated cost before they spend.
-            val probeBw = memBwProbe()
-            val throttled = probeBw < gateGBs
-            val halvedFirst = throttled && halvedOk &&
-              !sys.env.contains("SPARK_GRAFT_STANDARD_FIRST")
-            planJson = f"""{"membw_probe_gbs":$probeBw%.1f,"throttled":$throttled,""" +
-              s""""mode":"${if (halvedFirst) "halved-first" else "standard-first"}"}"""
-            System.err.println(f"[bench plan] membw=$probeBw%.1fGB/s throttled=$throttled " +
-              s"mode=${if (halvedFirst) "halved-first" else "standard-first"}")
-            // def, not val: ladder rungs change the cache state this
-            // estimate reads (rung 1 may synthesize the full corpus;
-            // pruneCache may evict it) — price the insurance pair at
-            // its call site, not at plan time
-            def estStandard: Long = estEnsureSec(streamDocs) +
-              estPairSec(baseCpus, streamDocs, attemptsFor(corpusCached(streamDocs)), levelGateCap)
-            if (halvedFirst) {
-              // Fallback ladder, up to 3 pairs while short of target;
-              // every pair is short (run-A lesson: one full-docs pair
-              // is one sample of a drifting throttle — its ~4-min
-              // 2-core level spans troughs; reduced-docs N-attempts
-              // are ~70-110 s and far likelier internally
-              // consistent). Rung ORDER is evidence-driven from the
-              // round-5 series: the quartered 1→4 pairing leads —
-              // its 4-core top level (~160-260k rows/s aggregate)
-              // sits under every DRAM ceiling this box has recorded,
-              // and it landed 0.823/0.924/0.907 in three consecutive
-              // windows whose ~330-470k ceilings capped the 8-thread
-              // level and sank the halved pairing to 0.59-0.75 (runs
-              // G/H/I; morning windows B/D let halved land
-              // 0.906/0.928 — quartered demands strictly less, so a
-              // window that clears halved clears quartered too).
-              // Rung 2 is the halved 2→8 pairing for shape diversity
-              // (and its bigger absolute rates when the window
-              // allows); rung 3 retries quartered. Still N vs 4N
-              // cores on one shared input per pair; cpus_n/docs ride
-              // in the artifact per pair.
-              var h = 0
-              while (bestEff < target && h < 3) {
-                h += 1
-                val (cN, docs, tag) =
-                  if (h == 2 || baseCpus < 4)
-                    (baseCpus / 2, halfDocs, s"pair-halved$h")
-                  else (baseCpus / 4, quarterDocs, s"pair-quarter$h")
-                // a rung skipped on budget must NOT end the ladder —
-                // a later rung may still fit (only the h<3 bound and
-                // the target end the loop)
-                fallbackPair(tag, cN, docs)
-              }
-              halvedDone = true
-              // insurance: a standard pair only if the halved pairing
-              // was skipped or came out non-credible/short of target
-              // AND the budget still covers it
-              if (bestEff < target && affordable("pair1", estStandard))
-                timedPair("pair1", baseCpus, streamDocs)
-            } else {
-              var k = 0
-              var budgetStop = false
-              while (!budgetStop && (k < nPairs || (k < maxPairs && bestEff < target))) {
-                k += 1
-                if (k == 1) timedPair("pair1", baseCpus, streamDocs)
-                else {
-                  // reserve the halved fallback's estimated cost
-                  // before spending on another standard pair — the
-                  // exact spend-before-reserve inversion that left r4
-                  // at 0.755 (skipped: pair2 AND pair-halved)
-                  val reserve =
-                    if (bestEff < target && halvedOk && !halvedDone)
-                      estHalvedSec(halfDocs, attemptsFor(corpusCached(halfDocs)))
-                    else 0L
-                  if (affordable(s"pair$k", estStandard + reserve))
-                    timedPair(s"pair$k", baseCpus, streamDocs)
-                  else budgetStop = true
-                }
-                if (k == 1 && bestEff < target && pairs.nonEmpty &&
-                    allThrottled(pairs.head)) tryHalved()
-              }
-              if (bestEff < target) tryHalved()
-            }
-          } catch {
-            case t: Throwable =>
-              streamError = Some(
-                t.toString.replaceAll("[\\\\\"\\n\\r\\t]", " ").take(300))
-              System.err.println(s"[bench] stream phase aborted (artifact still prints): $t")
-          } finally cleanupDirs.foreach(d => rmTree(java.nio.file.Paths.get(d)))
-          // select among credible pairs; if EVERY pair came out
-          // superlinear (all-degraded run), the measurements say
-          // nothing about the engine — report efficiency 0.0 with
-          // credible:false rather than manufacturing a capped-1.0
-          // headline from self-declared meaningless ratios (r2
-          // advice). The best pair's rates still ride along as the
-          // run's throughput evidence.
-          if (pairs.isEmpty) {
-            (0.0, 0L, false, "[]", 0.0, 0L, false, "[]", "[]", 0.0, baseCpus, false, streamDocs)
-          } else {
-            val credPairs = pairs.filter(r => credible(r.eff))
-            val isCred = credPairs.nonEmpty
-            val best = (if (isCred) credPairs else pairs).maxBy(_.eff)
-            val (r1, n1, ok1, _, _) = best.p1
-            val (r4, n4, ok4, _, _) = best.p4
-            val allA1 = pairs.map(_.p1._4.stripPrefix("[").stripSuffix("]"))
-              .filter(_.nonEmpty).mkString("[", ",", "]")
-            val allA4 = pairs.map(_.p4._4.stripPrefix("[").stripSuffix("]"))
-              .filter(_.nonEmpty).mkString("[", ",", "]")
-            // per-level min attempt membw (the probe the forked child
-            // itself ran around each measured attempt): the parent's
-            // gate probe can lapse before the fork's measurement, so
-            // this is the ground truth for what each level's window
-            // actually looked like — surfaced per pair so a
-            // throttle-skewed pairing is readable without digging
-            // through the attempts arrays
-            def minBw(attemptsJson: String): Double = {
-              val bws = """"membw_gbs":([0-9.]+)""".r
-                .findAllMatchIn(attemptsJson).map(_.group(1).toDouble).toSeq
-              if (bws.isEmpty) 0.0 else bws.min
-            }
-            val pj = pairs.map { r =>
-              f"""{"cpus_n":${r.cpusN},"docs":${r.docs},"rate_n":${r.p1._1}%.1f,"rate_4n":${r.p4._1}%.1f,""" +
-              f""""efficiency":${r.eff}%.3f,""" +
-              f""""membw_n_min":${minBw(r.p1._4)}%.1f,"membw_4n_min":${minBw(r.p4._4)}%.1f,""" +
-              f""""gate_n":{"membw_gbs":${r.g1._1}%.1f,"waited_sec":${r.g1._2}},""" +
-              f""""gate_4n":{"membw_gbs":${r.g4._1}%.1f,"waited_sec":${r.g4._2}}}"""
-            }.mkString("[", ",", "]")
-            // a ratio above 1.0 is superlinear — physically it means
-            // the N (denominator) level ran in a more throttled window
-            // than the 4N level, not that the engine scales >100%.
-            // Report the conservative min(ratio, 1.0); the raw per-pair
-            // ratios stay in `pairs` as evidence.
-            (r1, n1, ok1, allA1, r4, n4, ok4, allA4, pj,
-              if (isCred) math.min(best.eff, 1.0) else 0.0, best.cpusN, isCred, best.docs)
-          }
-      }
-
-    // per-attempt rates + /proc/stat steal% ride along so the judge
-    // can read the interference evidence directly from the artifact;
-    // `pairing` flags the halved-core fallback configuration and
-    // `credible` says whether any pair's ratio was non-superlinear
-    // (r2 advice: both were previously only derivable from `pairs`)
-    val pairing =
-      if (bestCpusN == baseCpus) "standard"
-      else if (bestCpusN * 2 == baseCpus) "halved"
-      else "quartered"
-    // rows_per_sec_vs_reference: the reference's only published
-    // sustained figure is ≈159 pages/s (reference README.md:16 — 4M
-    // pages in ≈7 h); the ratio against the 4N sustained rate rides in
-    // the artifact so the baseline comparison stops living in prose
-    // (round-3 verdict #6). Caveat unchanged: the physical task
-    // differs (no network fetch), so the honest reading is "Spark
-    // overhead does not eat the win".
-    val vsRef = rate4N / 159.0
-    // truncation bookkeeping: `truncated` is true when the
-    // self-enforced wall budget skipped stages or the stream phase
-    // aborted — the artifact says what a longer run would have added
-    val skippedJson = skippedStages.reverse.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val truncated = skippedStages.nonEmpty || streamError.nonEmpty
-    val errJson = streamError.map(e => s""","error":"$e"""").getOrElse("")
-    // fold the archived-evidence pointer into the artifact whenever
-    // the number of record falls short or a stage was skipped (round-4
-    // verdict #5): a truncated or degraded artifact still points the
-    // gate at the reproducible same-config result in bench_logs/
-    val priorEvidence =
-      if (eff < 0.8 || !credibleRun || truncated)
-        s""","prior_evidence":{"note":"archived rc=0 full-evidence runs of this exact engine+config (committed in repo)","runs":[""" +
-        s"""{"path":"bench_logs/r5_runD_halved928.log","pairing":"halved","efficiency":0.928},""" +
-        s"""{"path":"bench_logs/r5_runB_halved906.log","pairing":"halved","efficiency":0.906},""" +
-        s"""{"path":"bench_logs/r4_runG_halved963.log","pairing":"halved","efficiency":0.963},""" +
-        s"""{"path":"bench_logs/r4_runH_repro896.log","pairing":"halved","efficiency":0.896}]}"""
-      else ""
+    val v = verdict(levelN, level4N)
+    def attemptsJson(l: Level): String = l.attempts.map(a =>
+      f"""{"rate":${a.rate}%.1f,"wall":${a.wall}%.1f,"rows":${a.rows},"verified":${a.verified},""" +
+      f""""steal_pct":${a.stealPct}%.2f}""").mkString("[", ",", "]")
     val stream =
-      f"""{"docs":$bestDocs,"rows":$rowsN,"cpus_n":$bestCpusN,"cpus_4n":${bestCpusN * 4},""" +
-      f""""rate_n":$rateN%.1f,"rate_4n":$rate4N%.1f,"scaling_efficiency":$eff%.3f,""" +
-      f""""rows_per_sec_vs_reference":$vsRef%.1f,""" +
-      s""""credible":$credibleRun,"pairing":"$pairing","plan":$planJson,""" +
-      s""""verified":${okN && ok4N && rowsN == rows4N},""" +
-      s""""wall_budget_sec":$wallBudget,"elapsed_sec":$elapsedSec,""" +
-      s""""truncated":$truncated,"skipped":$skippedJson$errJson$priorEvidence,""" +
-      s""""pairs":$pairsJson,""" +
-      s""""attempts_n":$attN,"attempts_4n":$att4N}"""
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"query_env":$queryEnv,"sf":"$sfDir","stream":$stream}""")
+      f"""{"docs":$docs,"rows":$expected,"cpus_n":$n,"cpus_4n":$n4,""" +
+      f""""rate_n":${v.n.median}%.1f,"rate_n_min":${v.n.min}%.1f,"rate_n_max":${v.n.max}%.1f,""" +
+      f""""rate_4n":${v.n4.median}%.1f,"rate_4n_min":${v.n4.min}%.1f,"rate_4n_max":${v.n4.max}%.1f,""" +
+      f""""scaling_efficiency":${v.eff}%.3f,"scaling_efficiency_raw":${v.effRaw}%.3f,"target":$Target,""" +
+      s""""credible":${v.credible},"verified":${v.verified},"truncated":${v.truncated},""" +
+      s""""skipped":${skipped.map(jsonStr).mkString("[", ",", "]")},""" +
+      v.error.map(e => s""""error":${jsonStr(e)},""").getOrElse("") +
+      s""""box":{"nproc":$nproc,"cpus":$cpus,"mem_total_mb":${memTotal >> 20},""" +
+      s""""fork_heap_mb":${heap >> 20},"corpus_cap_docs":${corpusCapDocs(memTotal)}},""" +
+      s""""attempts_n":${attemptsJson(levelN)},"attempts_4n":${attemptsJson(level4N)}}"""
+    println(s"""{"metric":"total",$head,"stream":$stream}""")
+  }
+
+  def main(args: Array[String]): Unit = args.toList match {
+    case Nil => fullRun()
+    case List("synth", cpus, inDir, docs) => synthMain(cpus.toInt, inDir, docs.toLong)
+    case List("level", cpus, inDir, expected) => levelMain(cpus.toInt, inDir, expected.toLong)
+    case _ =>
+      System.err.println("usage: graft.Bench [synth <cpus> <inDir> <docs> | level <cpus> <inDir> <expected>]")
+      sys.exit(2)
   }
 }

@@ -123,8 +123,9 @@ final class ResultTable(val root: String) {
         // prefix) means this table was written before the seq chain
         // existed: silently skipping it would make committed data
         // INVISIBLE (ADVICE r4) — fail hard with the migration path
-        // instead
-        if (e.isEmpty && i < 0 && commitKey(n).isDefined)
+        // instead. Only a file that reads as a manifest counts: a stray
+        // `notes-1.json` has the same name shape and is just skipped.
+        if (e.isEmpty && i < 0 && commitKey(n).isDefined && isManifest(commitDir.resolve(fn)))
           throw new IllegalStateException(
             s"legacy pre-seq commit '$fn' in $commitDir — this table predates " +
             "the seq-prefixed commit log; rename each '<key>.json' to " +
@@ -135,6 +136,13 @@ final class ResultTable(val root: String) {
       }
     parsed.groupBy(_.key).values.map(_.minBy(_.seq)).toSeq.sortBy(_.seq)
   }
+
+  /** Whether `file` starts with the manifest header line that
+    * [[appendBatch]] writes first (`queryId:<id>`). */
+  private def isManifest(file: Path): Boolean =
+    try scala.util.Using.resource(Files.newBufferedReader(file, StandardCharsets.UTF_8))(
+      r => Option(r.readLine()).exists(_.startsWith("queryId:")))
+    catch { case _: java.io.IOException => false }
 
   /** O(#commits) — one commit-log listing, the same per-commit catalog
     * read Iceberg pays. Note: the seq-prefixed name format is not

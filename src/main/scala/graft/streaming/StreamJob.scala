@@ -48,9 +48,8 @@ object StreamJob {
       queryId: String,
       watermarkDelay: String = "10 minutes",
       sessionGapMs: Long = 30000L,
-      trigger: Trigger = Trigger.AvailableNow(),
-      fused: Boolean = true): StreamingQuery = {
-    val assembled = Stitch.stitch(limitPages(fragments, spec), watermarkDelay, sessionGapMs, fused)
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+    val assembled = Stitch.stitch(limitPages(fragments, spec), watermarkDelay, sessionGapMs)
     val extracted = extractStage(assembled, spec)
     extracted.writeStream
       .queryName(queryId)

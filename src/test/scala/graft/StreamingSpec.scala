@@ -299,6 +299,9 @@ class StreamingSpec extends SparkSuite {
     val dir = Files.createTempDirectory("graft-legacy").toString
     val table = new ResultTable(dir)
     table.appendBatch("q")(Seq(("a", 1)).toDF("k", "v"), 0L)
+    // a stray non-manifest file with the same name shape is skipped
+    Files.writeString(java.nio.file.Paths.get(s"$dir/_commits/notes-1.json"), "todo\n")
+    assert(table.snapshots() == Seq("q-0"))
     // a commit file named in the pre-seq format: silently skipping it
     // would make its data invisible — the table must refuse to read
     Files.writeString(java.nio.file.Paths.get(s"$dir/_commits/old-7.json"),
