@@ -414,11 +414,15 @@ object Bench {
     } finally spark.stop()
   }
 
+  /** SPARK_GRAFT_CPUS capped at, and defaulting to, `nproc`. */
+  private[graft] def boxCpus(nproc: Int): Int =
+    math.min(nproc, sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(nproc))
+
   private def fullRun(): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       throw new IllegalArgumentException("set SPARK_GRAFT_SF_DIR to a generated sf directory (TESTDATA.md)"))
     val nproc = Runtime.getRuntime.availableProcessors()
-    val cpus = math.min(nproc, sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(nproc))
+    val cpus = boxCpus(nproc)
     val memTotal = java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .asInstanceOf[com.sun.management.OperatingSystemMXBean].getTotalMemorySize
 

@@ -62,7 +62,7 @@ object SessionJar {
     }
   }
 
-  /** The semantics, shared by both state-API bindings AND the batch
+  /** The semantics, shared by the streaming operator AND its batch
     * image (graft.queries.TokenEngine.sessionJarFold — the DuckDB-
     * checked driver row): fold one batch's events (sorted into
     * event-time order so out-of-order arrival within a micro-batch

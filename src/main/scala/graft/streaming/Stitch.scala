@@ -34,8 +34,7 @@ final case class StitchState(
   def hasPage(pageIdx: Int): Boolean = pageIds.contains(pageIdx)
 
   def addPage(pageIdx: Int, toks: Array[Int], src: String, eventMs: Long): StitchState =
-    if (hasPage(pageIdx)) this // dup page = dropped row: state untouched,
-                               // exactly what the strict dedup stage does
+    if (hasPage(pageIdx)) this // dup page = dropped row: first arrival wins
     else StitchState(
       pageIds :+ pageIdx, pageLens :+ toks.length, tokens ++ toks,
       src, math.max(maxEventMs, eventMs))
@@ -75,10 +74,10 @@ object StitchState {
  *
  * Exact duplicate fragments collapse naturally (same page_idx, same
  * bytes — the reference's CRC32-keyed idempotent writes,
- * scrape.go:448-457). Late fragments beyond the watermark are dropped
- * *before* this operator by the upstream `dropDuplicates` watermark
- * (counted in StreamingQueryProgress.stateOperators
- * numRowsDroppedByWatermark — the reference records them on the task
+ * scrape.go:448-457). Late fragments beyond the watermark never reach
+ * the update function: Spark drops them at the operator's input and
+ * counts them in StreamingQueryProgress.stateOperators
+ * numRowsDroppedByWatermark (the reference records them on the task
  * error list, structure.go:182).
  *
  * Scale: state is per-in-flight-document, O(pages) each; the shuffle
@@ -90,11 +89,10 @@ object StitchState {
 object Stitch {
 
   /** Per-group update: merge new fragments, or emit+evict on timeout.
-    * With `fused`, late rows (event_time < watermark) are dropped HERE
-    * — same predicate the upstream dropDuplicatesWithinWatermark
-    * applies — so a session evicted by timeout can never be re-created
-    * by a straggler, without a second stateful operator. */
-  def update(gapMs: Long, fused: Boolean)(
+    * Rows reaching here are at or past the previous batch's watermark
+    * (Spark filters the rest), so a session evicted by timeout cannot
+    * be re-created by a straggler page. */
+  def update(gapMs: Long)(
       docId: String,
       rows: Iterator[Fragment],
       state: GroupState[StitchState]): Iterator[AssembledDoc] = {
@@ -108,9 +106,8 @@ object Stitch {
         new Timestamp(s.maxEventMs), nPages))
     } else {
       val wm = state.getCurrentWatermarkMs()
-      val live = if (fused) rows.filter(_.event_time.getTime >= wm) else rows
       var s = state.getOption.orNull
-      live.foreach { f =>
+      rows.foreach { f =>
         val prev = if (s == null) StitchState.empty else s
         s = prev.addPage(f.page_idx, f.tokens, f.source, f.event_time.getTime)
       }
@@ -125,39 +122,27 @@ object Stitch {
   }
 
   /**
-   * dedup → stitch. `watermarkDelay` bounds late-fragment acceptance
-   * (reference: no bound — unbounded memory; ours is the north_rule
-   * fix); `gap` is the session gap closing a document.
-   *
-   * The `dropDuplicates` stage is the crawl-frontier dedup of
-   * north_star: watermark-scoped state keyed by (doc_id, page_idx),
-   * drops exact re-emissions AND late rows (counted by the state
-   * operator's numRowsDroppedByWatermark metric).
+   * Fragment stream → assembled docs in ONE stateful operator: one
+   * shuffle on doc_id and one state store. `watermarkDelay` bounds
+   * late-fragment acceptance (reference: no bound — unbounded memory;
+   * ours is the north_rule fix): Spark drops rows older than the
+   * previous batch's watermark at the operator's input and counts
+   * them in its numRowsDroppedByWatermark metric. Page-level dedup —
+   * the crawl-frontier dedup of north_star — is
+   * `StitchState.addPage`; `gapMs` is the session gap closing a
+   * document.
    */
-  /** `fused = true` (default): late-drop + page-level dedup happen
-    * inside the stitcher — ONE shuffle and ONE state store. The
-    * separate `dropDuplicatesWithinWatermark` stage (`fused = false`)
-    * keeps a state entry PER FRAGMENT and a second shuffle just to
-    * pre-drop exact re-emissions; its one observable advantage is the
-    * per-operator numRowsDroppedByWatermark metric, so strict mode
-    * stays available where that audit trail is required. At 10^12
-    * sequences the fused form halves both the ingest shuffle volume
-    * and the state-commit bytes of the hot path. */
   def stitch(
       fragments: Dataset[Fragment],
       watermarkDelay: String = "10 minutes",
-      gapMs: Long = 30000L,
-      fused: Boolean = true): Dataset[AssembledDoc] = {
+      gapMs: Long = 30000L): Dataset[AssembledDoc] = {
     implicit val fragEnc = Encoders.product[Fragment]
     implicit val docEnc = Encoders.product[AssembledDoc]
     implicit val stateEnc = Encoders.product[StitchState]
-    val marked = fragments.withWatermark("event_time", watermarkDelay)
-    val deduped =
-      if (fused) marked
-      else marked.dropDuplicatesWithinWatermark("doc_id", "page_idx")
-    deduped
+    fragments
+      .withWatermark("event_time", watermarkDelay)
       .groupByKey(_.doc_id)(Encoders.STRING)
       .flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(update(gapMs, fused))
+        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(update(gapMs))
   }
 }

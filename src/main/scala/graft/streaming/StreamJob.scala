@@ -1,6 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import java.sql.Timestamp
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -14,8 +17,8 @@ import graft.sink.ResultTable
  *
  * {{{
  *   source (fragment stream)
- *     → watermark + dropDuplicates(doc_id, page_idx)   [frontier dedup]
- *     → flatMapGroupsWithState stitch by doc_id        [session assembly]
+ *     → watermark + flatMapGroupsWithState by doc_id   [page dedup +
+ *                                                       session assembly]
  *     → ExtractCompiler (segment → part columns)       [narrow, codegen]
  *     → foreachBatch → ResultTable                     [exactly-once sink]
  * }}}
@@ -23,8 +26,8 @@ import graft.sink.ResultTable
  * This is the streaming recast of the reference's Task.Parse lifecycle
  * (reference scrape/scrape.go:86-182): fetch workers → dedup/robots
  * gates → block division → extraction → KV store → ordered encode.
- * Thread/process boundaries become the two shuffles (dedup/stitch on
- * doc_id; none in extraction) and the driver-coordinated epoch commit.
+ * Thread/process boundaries become one shuffle (the stitch on doc_id;
+ * none in extraction) and the driver-coordinated epoch commit.
  *
  * Resumability: `checkpointLocation` + the ResultTable commit log give
  * kill-and-resume with no dupes and no loss (tested in StreamingSpec);
@@ -79,35 +82,42 @@ object StreamJob {
       .as[Fragment]
   }
 
+  /** The pages the stitcher keeps, restated apart from `Stitch` because
+    * it is the reference the streaming path is checked against:
+    * `limitPages`, then (with `watermarkDelay`) fragments older than
+    * `maxEvent - watermark` pruned, then first arrival per
+    * (doc_id, page_idx). First arrival is ranked by (event_time,
+    * frag_idx) so the winner is deterministic: a bare dropDuplicates
+    * keeps an arbitrary row, and event_time flows into the output.
+    * Only the keys and `cols` enter the rank's shuffle. */
+  private def firstArrivals(
+      fragments: Dataset[Fragment],
+      spec: ExtractionSpec,
+      watermarkDelay: Option[Long],
+      cols: Column*): DataFrame = {
+    val limited = limitPages(fragments, spec)
+    val pruned = watermarkDelay.fold(limited) { delayMs =>
+      val maxEvent = limited.agg(max(col("event_time"))).head().getTimestamp(0)
+      limited.filter(col("event_time") >= lit(new Timestamp(maxEvent.getTime - delayMs)))
+    }
+    val byArrival = Window.partitionBy(col("doc_id"), col("page_idx"))
+      .orderBy(col("event_time"), col("frag_idx"))
+    pruned.select(Seq(col("doc_id"), col("page_idx"), col("event_time"), col("frag_idx")) ++ cols: _*)
+      .withColumn("__rn", row_number().over(byArrival))
+      .filter(col("__rn") === 1).drop("__rn")
+  }
+
   /** Batch oracle for the same pipeline: what the sink must contain
     * for a given set of fragments once every session has closed.
-    * Late fragments (event_time older than `maxEvent - watermark`) are
-    * excluded exactly as the streaming watermark would drop them,
-    * assuming source order = event-time order (true for our generator
-    * feed). */
+    * Late fragments are excluded as the streaming watermark would drop
+    * them, assuming source order = event-time order (true for our
+    * generator feed). */
   def batchOracle(
       spark: SparkSession,
       fragments: Dataset[Fragment],
       spec: ExtractionSpec,
       watermarkDelay: Option[Long] = None): DataFrame = {
-    val limited = limitPages(fragments, spec)
-    val pruned = watermarkDelay match {
-      case Some(delayMs) =>
-        val maxEvent = limited.agg(max(col("event_time"))).head().getTimestamp(0)
-        limited.filter(col("event_time") >= lit(new java.sql.Timestamp(maxEvent.getTime - delayMs)))
-      case None => limited
-    }
-    // first-arrival wins, deterministically: the fused stitcher keeps
-    // the earliest event_time per (doc_id, page_idx); a bare
-    // dropDuplicates keeps an arbitrary row, and event_time flows into
-    // the output — latent flakiness if partitioning changes which
-    // duplicate survives
-    val firstArrival = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id"), col("page_idx"))
-      .orderBy(col("event_time"), col("frag_idx"))
-    val docs = pruned.toDF()
-      .withColumn("__rn", row_number().over(firstArrival))
-      .filter(col("__rn") === 1).drop("__rn")
+    val docs = firstArrivals(fragments, spec, watermarkDelay, col("source"), col("tokens"))
       .groupBy(col("doc_id"), col("source"))
       .agg(
         sort_array(collect_list(struct(col("page_idx"), col("tokens")))).as("parts"),
@@ -138,16 +148,8 @@ object StreamJob {
    * `batchOracle(...).count()` is pinned in StreamingSpec.
    */
   def expectedRows(fragments: Dataset[Fragment], spec: ExtractionSpec): Long = {
-    val limited = limitPages(fragments, spec)
-    val firstArrival = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id"), col("page_idx"))
-      .orderBy(col("event_time"), col("frag_idx"))
-    limited.toDF()
-      .select(col("doc_id"), col("page_idx"), col("event_time"), col("frag_idx"),
-        size(filter(col("tokens"),
-          t => t === lit(graft.model.TokenCodec.RECORD_START))).as("nb"))
-      .withColumn("__rn", row_number().over(firstArrival))
-      .filter(col("__rn") === 1)
+    firstArrivals(fragments, spec, None,
+      size(filter(col("tokens"), t => t === lit(graft.model.TokenCodec.RECORD_START))).as("nb"))
       .groupBy(col("doc_id")).agg(sum(col("nb")).as("nb"))
       .select(sum(greatest(col("nb"), lit(1L))).as("n"))
       .head().getLong(0)
