@@ -96,11 +96,7 @@ object Bench {
   /** Corpus size for a scale factor: large enough that compute
     * dominates the per-pass fixed cost (query planning, state-store
     * opens, a few seconds) at that scale's usual core count. */
-  def sfDocs(sfDir: String): Long = TokenEngine.scaleOf(sfDir) match {
-    case s if s >= 0.1  => 6400000L
-    case s if s >= 0.01 => 200000L
-    case _              => 20000L
-  }
+  def sfDocs(sfDir: String): Long = TokenEngine.byScale(sfDir, 20000L, 200000L, 6400000L)
 
   // ---- verdict ----------------------------------------------------
 

@@ -124,6 +124,61 @@ object SparkEntry {
       |  CASE WHEN len(p4) > 0 THEN CAST(len(p4) AS INT) END AS Images_count
       |FROM dec""".stripMargin
 
+  /** The tables the oracle SQL reads besides the sf directory's own:
+    * Verify writes each to {GRAFT_OUT}/.oracle_tables/<name> from the
+    * same definition its query uses, so every `oracle_tables/<name>`
+    * that [[oracleSql]] reads must have an entry here. */
+  def oracleTables: Seq[(String, (SparkSession, String) => DataFrame)] = {
+    import graft.pipeline._
+    import Pipeline.{docs, emb}
+    Seq(
+      // the synthesized token table, so DuckDB can oracle the
+      // token-domain queries
+      ("tokens", TokenEngine.docsFor),
+      ("child_tokens", TokenEngine.childUniverse),
+      // crawl oracle inputs: origin keys (the SAME definition the crawl
+      // queries use) + a SUPERSET of the reachable page universe with
+      // per-page next_key — DuckDB re-walks the chains recursively
+      // (stop/cycle/maxPages logic independent)
+      ("crawl_origins", TokenEngine.crawlOrigins),
+      ("crawl_pages", TokenEngine.crawlUniverse),
+      // pacing input rows (the SAME definition pacingSchedule folds
+      // over) — DuckDB replays only the fold, via its closed form
+      ("pacing_rows", TokenEngine.pacingRows),
+      // stitch input fragments (late rows already excluded) — DuckDB
+      // re-derives first-arrival dedup + page-order assembly itself
+      ("stitch_frags", TokenEngine.stitchFragments),
+      // session-jar cookie events — DuckDB re-derives the jar fold
+      // (TTL segmentation + per-event prefix aggregation) itself
+      ("jar_events", TokenEngine.jarEvents),
+      // poisoned token rows — DuckDB re-derives every row's dead-letter
+      // status independently (only the corruption itself is shared)
+      ("dl_rows", TokenEngine.dlRows),
+      ("media", (spark, dir) => Multimodal.synthesize(spark, Pipeline.mediaCount(dir)).toDF()),
+      // deterministic hyperplane buckets of the embeddings corpus: lets
+      // DuckDB rank the SAME candidate set independently (the bucketing
+      // itself is seeded-constant, verified by the recall test)
+      ("ann_buckets", (spark, dir) => Similarity.lshCandidates(emb(spark, dir))),
+      ("simhash_sigs", (spark, dir) => Dedup.simhashSigs(docs(spark, dir))),
+      // per-doc ordered k-gram hash stream: DuckDB redoes winnowing
+      // (window-min, distinct, sort, digest) independently
+      ("winnow_grams", (spark, dir) => TextAnalysis.winnowGrams(docs(spark, dir))),
+      // near-dup LSH bucket table (24 tables × 4 planes — the
+      // embedNearDupLsh parameters)
+      ("neardup_buckets", (spark, dir) =>
+        Similarity.lshCandidates(emb(spark, dir), nTables = 24, nPlanes = 4)),
+      // IVF cell assignments + query probe lists (same deterministic-
+      // bucketing-export scheme as ann_buckets)
+      ("ivf_cells", (spark, dir) => {
+        val e = emb(spark, dir)
+        Similarity.ivfCells(e, Similarity.ivfCentroids(e))
+      }),
+      ("ivf_probes", (spark, dir) => {
+        val e = emb(spark, dir)
+        Similarity.ivfProbeRows(Pipeline.annQueries(e), Similarity.ivfCentroids(e), 4)
+      }))
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops.
     * Token-domain queries read the tables Verify exports under

@@ -6,80 +6,20 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Bench.boxCpus(Runtime.getRuntime.availableProcessors())
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // Export the synthesized token table so DuckDB can oracle the
-    // token-domain queries: the driver only registers sfDir/*.parquet
-    // as views, but oracle SQL may read any absolute path — entries
-    // use the {GRAFT_OUT} placeholder, substituted here.
-    graft.queries.TokenEngine.docsFor(spark, sfDir)
-      .write.mode("overwrite").parquet(s"$outDir/.oracle_tables/tokens")
-    graft.queries.TokenEngine.childUniverse(spark, sfDir)
-      .write.mode("overwrite").parquet(s"$outDir/.oracle_tables/child_tokens")
-    // crawl oracle inputs: origin keys (the SAME definition the crawl
-    // queries use) + a SUPERSET of the reachable page universe with
-    // per-page next_key — DuckDB re-walks the chains recursively
-    // (stop/cycle/maxPages logic independent)
-    graft.queries.TokenEngine.crawlOrigins(spark, sfDir)
-      .write.mode("overwrite").parquet(s"$outDir/.oracle_tables/crawl_origins")
-    graft.queries.TokenEngine.crawlUniverse(spark, sfDir)
-      .write.mode("overwrite").parquet(s"$outDir/.oracle_tables/crawl_pages")
-    // pacing input rows (the SAME definition pacingSchedule folds
-    // over) — DuckDB replays only the fold, via its closed form
-    graft.queries.TokenEngine.pacingRows(spark, sfDir)
-      .write.mode("overwrite").parquet(s"$outDir/.oracle_tables/pacing_rows")
-    // stitch input fragments (late rows already excluded) — DuckDB
-    // re-derives first-arrival dedup + page-order assembly itself
-    graft.queries.TokenEngine.stitchFragments(spark, sfDir)
-      .write.mode("overwrite").parquet(s"$outDir/.oracle_tables/stitch_frags")
-    // session-jar cookie events — DuckDB re-derives the jar fold
-    // (TTL segmentation + per-event prefix aggregation) itself
-    graft.queries.TokenEngine.jarEvents(spark, sfDir)
-      .write.mode("overwrite").parquet(s"$outDir/.oracle_tables/jar_events")
-    // poisoned token rows — DuckDB re-derives every row's dead-letter
-    // status independently (only the corruption itself is shared)
-    graft.queries.TokenEngine.dlRows(spark, sfDir)
-      .write.mode("overwrite").parquet(s"$outDir/.oracle_tables/dl_rows")
-    graft.pipeline.Multimodal
-      .synthesize(spark, graft.queries.Pipeline.mediaCount(sfDir))
-      .write.mode("overwrite").parquet(s"$outDir/.oracle_tables/media")
-    // deterministic hyperplane buckets of the embeddings corpus: lets
-    // DuckDB rank the SAME candidate set independently (the bucketing
-    // itself is seeded-constant, verified by the recall test)
-    graft.pipeline.Similarity
-      .lshCandidates(spark.read.parquet(s"$sfDir/embeddings.parquet"))
-      .write.mode("overwrite").parquet(s"$outDir/.oracle_tables/ann_buckets")
-    graft.pipeline.Dedup
-      .simhashSigs(spark.read.parquet(s"$sfDir/documents.parquet"))
-      .write.mode("overwrite").parquet(s"$outDir/.oracle_tables/simhash_sigs")
-    // per-doc ordered k-gram hash stream: DuckDB redoes winnowing
-    // (window-min, distinct, sort, digest) independently
-    graft.pipeline.TextAnalysis
-      .winnowGrams(spark.read.parquet(s"$sfDir/documents.parquet"))
-      .write.mode("overwrite").parquet(s"$outDir/.oracle_tables/winnow_grams")
-    // near-dup LSH bucket table (24 tables × 4 planes — the
-    // embedNearDupLsh parameters)
-    graft.pipeline.Similarity
-      .lshCandidates(spark.read.parquet(s"$sfDir/embeddings.parquet"),
-        nTables = 24, nPlanes = 4)
-      .write.mode("overwrite").parquet(s"$outDir/.oracle_tables/neardup_buckets")
-    // IVF cell assignments + query probe lists (same deterministic-
-    // bucketing-export scheme as ann_buckets)
-    locally {
-      val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      val cents = graft.pipeline.Similarity.ivfCentroids(e)
-      graft.pipeline.Similarity.ivfCells(e, cents)
-        .write.mode("overwrite").parquet(s"$outDir/.oracle_tables/ivf_cells")
-      graft.pipeline.Similarity
-        .ivfProbeRows(e.filter(org.apache.spark.sql.functions.col("vec_id") < 10), cents, 4)
-        .write.mode("overwrite").parquet(s"$outDir/.oracle_tables/ivf_probes")
+    // oracle SQL may read any absolute path, not only the sfDir tables
+    // the DuckDB compare registers as views: its entries read the exported
+    // tables through the {GRAFT_OUT} placeholder, substituted below
+    SparkEntry.oracleTables.foreach { case (name, table) =>
+      table(spark, sfDir).write.mode("overwrite").parquet(s"$outDir/.oracle_tables/$name")
     }
     SparkEntry.queries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

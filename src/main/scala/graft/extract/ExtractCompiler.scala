@@ -46,16 +46,6 @@ object ExtractCompiler {
     df.select(col("*"), posexplode(blocks).as(Seq("block_idx", "block_tokens")))
   }
 
-  /** Split one block into fields: `[tag payload* FIELD_DELIM]*` →
-    * array of field arrays (tag at head, delimiter stripped). */
-  def fieldsOf(block: Column): Column = graft2.splitFields(block, FIELD_DELIM)
-
-  /** Payloads (tag stripped) of the fields matching a selector tag —
-    * fused codegen kernel; the match count is its size, so no separate
-    * matched-fields column is needed. */
-  def matchedPayloads(block: Column, tag: Int): Column =
-    graft2.payloadsForTag(fieldsOf(block), tag)
-
   /** Filter chain packed 3 bits per op, LSB-first = reference
     * left-to-right chaining (extract/filters.go:7-21); consumed by the
     * decodeAll kernel so the Text part needs no per-payload lambda. */
@@ -72,29 +62,15 @@ object ExtractCompiler {
     }
   }
 
-  /** Base-36 decode of a payload to a space-joined string (the "text"
-    * of the field) — matches TokenCodec.decodeToken. One-pass codegen
-    * kernel (was transform+conv+array_join). */
-  def decodeText(payload: Column): Column = graft2.decodeJoin(payload)
-
-  /** 0-based start offsets of contiguous subsequence `pattern` in
-    * `payload` — the regex find-all analog (reference
-    * extract/extractors.go:215-231). Pattern is a compile-time literal,
-    * so the match predicate unrolls into plain conjunctions. */
-  def patternPositions(payload: Column, pattern: Seq[Int]): Column = {
-    require(pattern.nonEmpty, "empty token pattern")
-    graft2.tokenFindAll(payload, pattern)
-  }
-
   /** One compiled part = Field×Type (reference Part, structure.go:113-126).
     * All extractors keep list form internally; scalar/list collapse
     * happens only at the encoder boundary (SURVEY §7.4) because a Spark
     * column cannot change type per row. Nil-omission: zero matches →
     * null unless includeIfEmpty.
     *
-    * `matched`/`payloads` are references to per-tag columns
-    * materialized once in [[compile]] — passing the raw expressions
-    * here would re-evaluate the whole field-split chain per part. */
+    * `payloads` references the per-tag column materialized once in
+    * [[compile]] — passing the raw expression here would re-evaluate
+    * the whole field-split chain per part. */
   def partColumn(payloads: Column, f: FieldSpec, tpe: ExtractorType): Option[Column] = {
     // |matched fields| == |payloads| (payloadsForTag strips tags 1:1),
     // so the nil guard and Count both read the payloads column
@@ -149,13 +125,14 @@ object ExtractCompiler {
         else f)
 
     // Materialize shared subexpressions as real columns, each its own
-    // projection step: the field split once per block, then the
+    // projection step: the field split once per block (`[tag payload*
+    // FIELD_DELIM]*` → field arrays, tag at head), then the
     // matched payloads once per distinct selector tag (one fused
     // codegen kernel each). CollapseProject keeps these boundaries
     // (it refuses to inline a non-cheap expression referenced more
     // than once), so each is evaluated one time per row instead of
     // once per part column.
-    val withFields = blocks.withColumn("__fields", fieldsOf(col("block_tokens")))
+    val withFields = blocks.withColumn("__fields", graft2.splitFields(col("block_tokens"), FIELD_DELIM))
     val tags = compiled.map(_.selector).distinct
     val withTags = tags.foldLeft(withFields) { (df, tag) =>
       df.withColumn(s"__p_$tag", graft2.payloadsForTag(col("__fields"), tag))

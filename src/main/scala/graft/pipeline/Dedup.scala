@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorExprs
+import org.apache.spark.sql.graft.GraftExpressions
 
 /**
  * Deduplication operators for a training-data pipeline over the
@@ -47,7 +47,7 @@ object Dedup {
     * codegen kernel (the array_distinct(transform(sequence...)) chain
     * is interpreted and was a large share of every dedup query). */
   def shingles(textCol: Column, n: Int = 3): Column =
-    graft.functions.VectorExprs.shingleSet(words(textCol), n)
+    GraftExpressions.shingleSet(words(textCol), n)
 
   /** doc_id + distinct shingle set (shared by jaccard + minhash). */
   def shingleSets(docs: DataFrame, n: Int = 3): DataFrame =
@@ -139,7 +139,7 @@ object Dedup {
    */
   def minhashSignature(sh: Column, k: Int = 32, seed: Long = 42L): Column = {
     val params = minhashParams(k, seed)
-    graft.functions.VectorExprs.minhashSig(
+    GraftExpressions.minhashSig(
       sh, params.map(_._1).toArray, params.map(_._2).toArray, MinhashP)
   }
 
@@ -173,12 +173,7 @@ object Dedup {
           hash(slice(col("sig"), bIdx * rowsPerBand + 1, rowsPerBand)).as("bkey"))): _*))
         .as("b"))
       .select(col("doc_id"), col("b.band"), col("b.bkey"))
-    val l = banded.toDF("d1", "band", "bkey")
-    val r = banded.toDF("d2", "band", "bkey")
-    val cand = l.join(r, Seq("band", "bkey")).filter(col("d1") < col("d2"))
-      .select(col("d1"), col("d2"))
-      .dropDuplicates("d1", "d2")
-    cand
+    bandPairs(banded, "d1", "d2")
       .join(sets.select(col("doc_id").as("d1"), col("sh").as("sh1")), Seq("d1"))
       .join(sets.select(col("doc_id").as("d2"), col("sh").as("sh2")), Seq("d2"))
       .withColumn("inter", size(array_intersect(col("sh1"), col("sh2"))))
@@ -191,12 +186,23 @@ object Dedup {
       .orderBy(col("d1"), col("d2"))
   }
 
+  /** Candidate pairs of an LSH banding: `banded` is (id, band key
+    * columns…); rows sharing every band key meet in one self-join and
+    * come out once as (a, b) with a < b. */
+  private def bandPairs(banded: DataFrame, a: String, b: String): DataFrame = {
+    val keys = banded.columns.toSeq.tail
+    banded.toDF(a +: keys: _*).join(banded.toDF(b +: keys: _*), keys)
+      .filter(col(a) < col(b))
+      .select(col(a), col(b))
+      .dropDuplicates(a, b)
+  }
+
   /** Per-doc 64-bit SimHash signatures (exported by Verify so the
     * DuckDB oracle can redo banding + hamming verification
     * independently). */
   def simhashSigs(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
-      VectorExprs.simhash64(words(col("text"))).as("sig"))
+      GraftExpressions.simhash64(words(col("text"))).as("sig"))
 
   /** SimHash near-dup pairs: 64-bit signature per doc (codegen'd
     * custom expression), banded into 4×16-bit keys (pigeonhole
@@ -252,7 +258,7 @@ object Dedup {
     // deduped after ordering
     a.join(b, Seq("task"))
       .filter(col("id_a") =!= col("id_b"))
-      .filter(VectorExprs.cosineSim(col("va"), col("vb")) >= threshold)
+      .filter(GraftExpressions.cosineSim(col("va"), col("vb")) >= threshold)
       .select(least(col("id_a"), col("id_b")).as("id_a"),
         greatest(col("id_a"), col("id_b")).as("id_b"))
       .dropDuplicates("id_a", "id_b")
@@ -271,15 +277,10 @@ object Dedup {
       nPlanes: Int = 4,
       dim: Int = 64,
       seed: Long = 42L): DataFrame = {
-    val buckets = Similarity.lshCandidates(emb, nTables, nPlanes, dim, seed)
-    val l = buckets.toDF("id_a", "tbl", "bucket")
-    val r = buckets.toDF("id_b", "tbl", "bucket")
-    val cand = l.join(r, Seq("tbl", "bucket")).filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b")).dropDuplicates("id_a", "id_b")
-    cand
+    bandPairs(Similarity.lshCandidates(emb, nTables, nPlanes, dim, seed), "id_a", "id_b")
       .join(emb.select(col("vec_id").as("id_a"), col("embedding").as("va")), Seq("id_a"))
       .join(emb.select(col("vec_id").as("id_b"), col("embedding").as("vb")), Seq("id_b"))
-      .filter(VectorExprs.cosineSim(col("va"), col("vb")) >= threshold)
+      .filter(GraftExpressions.cosineSim(col("va"), col("vb")) >= threshold)
       .select(col("id_a"), col("id_b"))
       .orderBy(col("id_a"), col("id_b"))
   }

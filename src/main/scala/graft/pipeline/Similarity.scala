@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorExprs
+import org.apache.spark.sql.graft.GraftExpressions
 import graft.gen.TokenGen
 
 /**
@@ -43,15 +43,29 @@ object Similarity {
       excludeSelf: Boolean = true): DataFrame = {
     val q = queries.select(col("vec_id").as("q_id"), col("embedding").as("qv"))
     val c = corpus.select(col("vec_id").as("n_id"), col("embedding").as("nv"))
-    val scored = c.join(broadcast(q),
-        if (excludeSelf) col("q_id") =!= col("n_id") else lit(true))
-      .withColumn("cos", VectorExprs.cosineSim(col("qv"), col("nv")))
+    rankTopK(c.join(broadcast(q),
+      if (excludeSelf) col("q_id") =!= col("n_id") else lit(true)), k)
+  }
+
+  /** The rank tail every top-k shares: cosine of each (qv, nv) pair,
+    * then per `q_id` the first k by (cos desc, n_id) as (q_id, rank,
+    * n_id) rows. */
+  private def rankTopK(pairs: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-    scored.withColumn("rank", row_number().over(w))
+    pairs.withColumn("cos", GraftExpressions.cosineSim(col("qv"), col("nv")))
+      .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("q_id"), col("rank").cast("bigint").as("rank"), col("n_id"))
       .orderBy(col("q_id"), col("rank"))
   }
+
+  /** Exact top-k within candidate (q_id, n_id) pairs: both embeddings
+    * joined back by id, then [[rankTopK]]. */
+  private def rankCandidates(
+      cand: DataFrame, corpus: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    rankTopK(cand
+      .join(queries.select(col("vec_id").as("q_id"), col("embedding").as("qv")), Seq("q_id"))
+      .join(corpus.select(col("vec_id").as("n_id"), col("embedding").as("nv")), Seq("n_id")), k)
 
   /** (vec_id, table, bucket) rows: bucket = sign bits of the vector
     * against each hyperplane of the table, via the fused
@@ -68,7 +82,7 @@ object Similarity {
     val planes = hyperplanes(nTables, nPlanes, dim, seed)
     val tables = (0 until nTables).map { t =>
       struct(lit(t).as("tbl"),
-        VectorExprs.hyperplaneBucket(col("embedding"), planes(t).toArray).as("bucket"))
+        GraftExpressions.hyperplaneBucket(col("embedding"), planes(t).toArray).as("bucket"))
     }
     emb.select(col("vec_id"), explode(array(tables: _*)).as("b"))
       .select(col("vec_id"), col("b.tbl"), col("b.bucket"))
@@ -125,13 +139,13 @@ object Similarity {
   /** (vec_id, cell) corpus assignment under the IVF quantizer. */
   def ivfCells(emb: DataFrame, cents: Array[Array[Double]]): DataFrame =
     emb.select(col("vec_id"),
-      element_at(graft.functions.VectorExprs.ivfProbes(col("embedding"), cents, 1), 1)
+      element_at(GraftExpressions.ivfProbes(col("embedding"), cents, 1), 1)
         .as("cell"))
 
   /** (q_id, cell) probe list per query: the nProbe nearest cells. */
   def ivfProbeRows(queries: DataFrame, cents: Array[Array[Double]], nProbe: Int): DataFrame =
     queries.select(col("vec_id").as("q_id"),
-      explode(graft.functions.VectorExprs.ivfProbes(col("embedding"), cents, nProbe))
+      explode(GraftExpressions.ivfProbes(col("embedding"), cents, nProbe))
         .as("cell"))
 
   /**
@@ -153,15 +167,7 @@ object Similarity {
       .join(cells, Seq("cell"))
       .select(col("q_id"), col("vec_id").as("n_id"))
       .filter(col("q_id") =!= col("n_id"))
-    val scored = cand
-      .join(queries.select(col("vec_id").as("q_id"), col("embedding").as("qv")), Seq("q_id"))
-      .join(corpus.select(col("vec_id").as("n_id"), col("embedding").as("nv")), Seq("n_id"))
-      .withColumn("cos", VectorExprs.cosineSim(col("qv"), col("nv")))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank").cast("bigint").as("rank"), col("n_id"))
-      .orderBy(col("q_id"), col("rank"))
+    rankCandidates(cand, corpus, queries, k)
   }
 
   /** Approximate top-k: exact ranking restricted to bucket-sharing
@@ -180,14 +186,6 @@ object Similarity {
     val cand = qb.join(cb, Seq("tbl", "bucket"))
       .filter(col("q_id") =!= col("n_id"))
       .select(col("q_id"), col("n_id")).dropDuplicates("q_id", "n_id")
-    val scored = cand
-      .join(queries.select(col("vec_id").as("q_id"), col("embedding").as("qv")), Seq("q_id"))
-      .join(corpus.select(col("vec_id").as("n_id"), col("embedding").as("nv")), Seq("n_id"))
-      .withColumn("cos", VectorExprs.cosineSim(col("qv"), col("nv")))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank").cast("bigint").as("rank"), col("n_id"))
-      .orderBy(col("q_id"), col("rank"))
+    rankCandidates(cand, corpus, queries, k)
   }
 }

@@ -2,6 +2,9 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftExpressions
+
+import Dedup.words
 
 /**
  * Text-analysis operators over the `documents` table: token counting,
@@ -21,8 +24,6 @@ object TextAnalysis {
     "es" -> Seq("el", "la", "de", "que", "y", "en", "un", "es"),
     "fr" -> Seq("le", "la", "de", "et", "les", "des", "une", "est"),
     "zh" -> Seq("的", "是", "不", "了", "在", "人", "有", "我"))
-
-  private def words(c: Column): Column = split(c, " ")
 
   /** Counts/lengths export as BIGINT: DuckDB len()/length() are
     * int64, Spark size()/length() int32 — physical-width parity for
@@ -85,7 +86,7 @@ object TextAnalysis {
     * sort, digest) independently from the same hash stream — the
     * same export scheme as the simhash signatures. */
   def gramHashes(textCol: Column): Column =
-    graft.functions.VectorExprs.gramHashes(words(lower(trim(textCol))), 3)
+    GraftExpressions.gramHashes(words(lower(trim(textCol))), 3)
 
   /** (doc_id, hashes) export table for the winnow oracle. */
   def winnowGrams(docs: DataFrame): DataFrame =
@@ -99,7 +100,7 @@ object TextAnalysis {
     docs.select(
       col("doc_id"),
       md5(lower(trim(col("text")))).as("md5_fp"),
-      graft.functions.VectorExprs.winnowSelect(gramHashes(col("text")), window)
+      GraftExpressions.winnowSelect(gramHashes(col("text")), window)
         .as("winnow_fp"))
       .orderBy(col("doc_id"))
 

@@ -15,10 +15,13 @@ import graft.pipeline._
  */
 object Pipeline {
 
-  private def docs(spark: SparkSession, dir: String): DataFrame =
+  private[graft] def docs(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"$dir/documents.parquet")
-  private def emb(spark: SparkSession, dir: String): DataFrame =
+  private[graft] def emb(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"$dir/embeddings.parquet")
+
+  /** The ANN queries' query vectors (also the IVF probe export's). */
+  private[graft] def annQueries(e: DataFrame): DataFrame = e.filter(col("vec_id") < 10)
 
   def exactDedup(spark: SparkSession, dir: String): DataFrame =
     Dedup.exact(docs(spark, dir))
@@ -40,17 +43,17 @@ object Pipeline {
 
   def annTopK(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
-    Similarity.bruteTopK(e, e.filter(col("vec_id") < 10), k = 5)
+    Similarity.bruteTopK(e, annQueries(e), k = 5)
   }
 
   def annLsh(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
-    Similarity.lshTopK(e, e.filter(col("vec_id") < 10), k = 5)
+    Similarity.lshTopK(e, annQueries(e), k = 5)
   }
 
   def annIvf(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
-    Similarity.ivfTopK(e, e.filter(col("vec_id") < 10), k = 5)
+    Similarity.ivfTopK(e, annQueries(e), k = 5)
   }
 
   def tokenCounts(spark: SparkSession, dir: String): DataFrame =
@@ -80,11 +83,7 @@ object Pipeline {
 
   /** Media corpus size scaled to the sf dir (shared with Verify's
     * export so the DuckDB oracle sees the same rows). */
-  def mediaCount(dir: String): Long = TokenEngine.scaleOf(dir) match {
-    case s if s >= 0.1  => 2000L
-    case s if s >= 0.01 => 500L
-    case _              => 200L
-  }
+  def mediaCount(dir: String): Long = TokenEngine.byScale(dir, 200L, 500L, 2000L)
 
   def multimodalStats(spark: SparkSession, dir: String): DataFrame =
     Multimodal.kindStats(Multimodal.extractFeatures(

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.streaming.WindowAggs
+
 /**
  * Relational operator coverage (SURVEY §2.4-§2.8 recasts) over the
  * driver's TPC-H-ish tables, each with a DuckDB oracle in
@@ -159,44 +161,47 @@ object Relational {
         length(col("p_name")).cast("int").as("name_len"))
       .orderBy(col("p_partkey"))
 
-  /** Tumbling event-time window (SURVEY §2.6 W4 / §2.5 A4, batch form —
-    * identical plan to WindowAggs.tumblingStream minus the watermark).
-    * Window bounds exported as epoch millis so the DuckDB oracle
-    * compares integers, not timezone-bound timestamps. */
-  def qTumbling(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "events")
-      .withColumn("ts", col("ts").cast("timestamp")) // parquet NTZ -> UTC session time
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,2)")).as("tv"))
-      .select(unix_millis(col("w.start")).as("w_start"),
+  /** The `events` table with `ts` as a timestamp (parquet NTZ -> UTC
+    * session time), input of the three window queries. */
+  private def events(spark: SparkSession, dir: String): DataFrame =
+    t(spark, dir, "events").withColumn("ts", col("ts").cast("timestamp"))
+
+  /** Count and exact decimal value sum, the aggregates of the three
+    * window queries. */
+  private def countAndValue: Seq[Column] =
+    Seq(count(lit(1)).as("n"), sum(col("value").cast("decimal(18,2)")).as("tv"))
+
+  /** Output rows of a per-event-type window: start as epoch millis, in
+    * (window, event type) order. */
+  private def perWindow(windowed: DataFrame): DataFrame =
+    windowed
+      .select(unix_millis(col("w_start")).as("w_start"),
         col("event_type"), col("n"), cents(col("tv"), 2).as("total_value"))
       .orderBy(col("w_start"), col("event_type"))
+
+  /** Tumbling event-time window (SURVEY §2.6 W4 / §2.5 A4), batch form
+    * of [[WindowAggs.tumbling]]: a streaming caller runs the same
+    * aggregation over a watermarked input. Window bounds exported as
+    * epoch millis so the DuckDB oracle compares integers, not
+    * timezone-bound timestamps. */
+  def qTumbling(spark: SparkSession, dir: String): DataFrame =
+    perWindow(WindowAggs.tumbling(events(spark, dir), "ts", "1 hour", "event_type",
+      countAndValue: _*))
 
   /** Sliding window, 1 h length / 30 min slide — each event lands in
     * two windows. */
   def qSliding(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "events")
-      .withColumn("ts", col("ts").cast("timestamp")) // parquet NTZ -> UTC session time
-      .groupBy(window(col("ts"), "1 hour", "30 minutes").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,2)")).as("tv"))
-      .select(unix_millis(col("w.start")).as("w_start"),
-        col("event_type"), col("n"), cents(col("tv"), 2).as("total_value"))
-      .orderBy(col("w_start"), col("event_type"))
+    perWindow(WindowAggs.sliding(events(spark, dir), "ts", "1 hour", "30 minutes", "event_type",
+      countAndValue: _*))
 
   /** Session window per user with 30 min inactivity gap (W4; the
     * declarative sibling of the stateful Stitch sessions). Session end
     * = last event + gap, per Spark session_window semantics — the
     * oracle reproduces that as max(ts) + interval. */
   def qSessionWindow(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "events")
-      .withColumn("ts", col("ts").cast("timestamp"))
-      .groupBy(session_window(col("ts"), "30 minutes").as("w"), col("user_id"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,2)")).as("tv"))
-      .select(col("user_id"), unix_millis(col("w.start")).as("sess_start"),
-        unix_millis(col("w.end")).as("sess_end"), col("n"), cents(col("tv"), 2).as("total_value"))
+    WindowAggs.session(events(spark, dir), "ts", "30 minutes", "user_id", countAndValue: _*)
+      .select(col("user_id"), unix_millis(col("w_start")).as("sess_start"),
+        unix_millis(col("w_end")).as("sess_end"), col("n"), cents(col("tv"), 2).as("total_value"))
       .orderBy(col("user_id"), col("sess_start"))
 
   /** Exact distinct counts (SURVEY §2.5 A5 — frontier dedup statistics,

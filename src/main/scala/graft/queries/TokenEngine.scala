@@ -9,13 +9,14 @@ import graft.model._
 /**
  * Token-domain engine queries — the north-star pipeline run in batch
  * form over the deterministically synthesized tokenized-sequence table
- * (FIXTURES §1; seed=42, no external data). These have no DuckDB
- * oracle (the table lives nowhere DuckDB can see) — correctness is
- * enforced by the straight-line Scala oracle in the test suite
- * (graft.OracleSpec) per SURVEY §5; the driver records rows>0.
+ * (FIXTURES §1; seed=42, no external data). Every one is DuckDB-
+ * checked: Verify exports the token table and the other inputs these
+ * queries derive from it ([[graft.SparkEntry.oracleTables]]), and
+ * each `oracleSql` entry re-derives the result independently from
+ * those tables.
  *
- * Row counts scale with the sf dir so Bench exercises real volume:
- * sf0.001→2k docs, sf0.01→20k, sf0.1→200k.
+ * Row counts scale with the sf dir ([[byScale]]) so Bench exercises
+ * real volume: sf0.001→2k docs, sf0.01→20k, sf0.1→200k.
  */
 object TokenEngine {
 
@@ -29,14 +30,12 @@ object TokenEngine {
     * details_join would otherwise re-execute per branch. Content is
     * pure-seeded (TokenGen, seed=42), so the file is a deterministic
     * fixture, same standing as /root/testdata/sf*. */
-  def docsFor(spark: SparkSession, dir: String): DataFrame = {
-    val n = scaleOf(dir) match {
-      case s if s >= 0.1  => 200000L
-      case s if s >= 0.01 => 20000L
-      case _              => 2000L
-    }
-    spark.read.parquet(materializedTable(spark, n))
-  }
+  def docsFor(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(materializedTable(spark, docCount(dir)))
+
+  /** Docs in the token table for the sf directory; the stitch row's
+    * fragment stream ([[stitchFragments]]) covers as many docs. */
+  private def docCount(dir: String): Long = byScale(dir, 2000L, 20000L, 200000L)
 
   private val tableLock = new Object
   private def materializedTable(spark: SparkSession, n: Long): String =
@@ -83,6 +82,14 @@ object TokenEngine {
 
   def scaleOf(dir: String): Double =
     "sf([0-9.]+)".r.findFirstMatchIn(dir).map(_.group(1).toDouble).getOrElse(0.001)
+
+  /** The one scale ladder of the sf-sized inputs: `small` below
+    * sf0.01, `medium` from sf0.01, `large` from sf0.1. */
+  def byScale(dir: String, small: Long, medium: Long, large: Long): Long = scaleOf(dir) match {
+    case s if s >= 0.1  => large
+    case s if s >= 0.01 => medium
+    case _              => small
+  }
 
   /** The flagship spec (port of the persons_cards payload shape,
     * reference scrape/scrape_test.go:35-68): two fields × several
@@ -200,13 +207,6 @@ object TokenEngine {
         max(col("n_tok")).as("max_tokens"))
       .orderBy(col("source"))
 
-  /** Details traversal in batch form (J1): a Path field extracts link
-    * keys; the child universe is the deterministic key→page function
-    * (TokenGen.childTokens); child blocks are nested per parent block
-    * under `Links_details` in (key, block) order. The child side is
-    * broadcast — the detail-page universe is far smaller than the
-    * parent block count (many parents share detail pages), which also
-    * removes hot-link-key join skew. */
   /** Per-source selector-tag histogram via the custom typed
     * `Aggregator` UDAF (SURVEY §2.10 — graft.functions.TagHistogram):
     * one constant-width buffer per source, partial-merged map-side,
@@ -220,25 +220,30 @@ object TokenEngine {
       .filter(col("n") > 0)
       .orderBy(col("source"), col("tag"))
 
-  /** The details-traversal parent/child specs (shared with Verify's
-    * child-universe export so the DuckDB oracle sees the same child
-    * docs). */
-  val detailsParentSpec: ExtractionSpec = ExtractionSpec("with_details", Seq(
+  /** The details-traversal spec: the Links field carries the child
+    * spec. Shared by [[detailsJoin]] and the child-universe export, so
+    * the DuckDB oracle sees the same child docs. */
+  val detailsSpec: ExtractionSpec = ExtractionSpec("with_details", Seq(
     FieldSpec("Names", selector = 3, types = Seq(ExtractorType.Text, ExtractorType.Count)),
-    FieldSpec("Links", selector = 5, types = Seq(ExtractorType.Path))))
-  val detailsChildSpec: ExtractionSpec = ExtractionSpec("detail", Seq(
-    FieldSpec("Phones", selector = 6, types = Seq(ExtractorType.Text, ExtractorType.Count))))
+    FieldSpec("Links", selector = 5, types = Seq(ExtractorType.Path),
+      details = Some(ExtractionSpec("detail", Seq(
+        FieldSpec("Phones", selector = 6, types = Seq(ExtractorType.Text, ExtractorType.Count))))))))
 
-  /** Child-doc universe reachable from the flagship details spec:
-    * distinct extracted Path keys resolved through the deterministic
-    * key→page function (TokenGen.childDocs). */
+  /** Child-doc universe reachable from the details spec: distinct
+    * extracted Path keys resolved through the deterministic key→page
+    * function (TokenGen.childDocs). `compile` extracts the parent
+    * level only; the nested child spec is [[detailsJoin]]'s. */
   def childUniverse(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val parents = ExtractCompiler.compile(docsFor(spark, dir), detailsParentSpec)
+    val parents = ExtractCompiler.compile(docsFor(spark, dir), detailsSpec)
     val keys = parents.select(explode(col("__path_Links")).as("k")).as[String]
     graft.gen.TokenGen.childDocs(spark, keys)
   }
 
+  /** Details traversal in batch form (J1): a Path field extracts link
+    * keys; the child universe is the deterministic key→page function
+    * (TokenGen.childDocs); child blocks are nested per parent block
+    * under `Links_details` in (key, block) order. */
   def detailsJoin(spark: SparkSession, dir: String): DataFrame = {
     // declarative nesting: the Links field carries the child spec and
     // the compiler recurses (reference scrape/scrape.go:279-292) — no
@@ -246,12 +251,8 @@ object TokenEngine {
     // is genuinely small; at sf>=0.1 the link universe is ~1 child doc
     // per parent doc, so the nested side is fact-sized -> sort-merge
     // join on link_key.
-    val spec = ExtractionSpec("with_details", Seq(
-      FieldSpec("Names", selector = 3, types = Seq(ExtractorType.Text, ExtractorType.Count)),
-      FieldSpec("Links", selector = 5, types = Seq(ExtractorType.Path),
-        details = Some(detailsChildSpec))))
     ExtractCompiler
-      .compileWithDetails(docsFor(spark, dir), spec,
+      .compileWithDetails(docsFor(spark, dir), detailsSpec,
         (s, keys) => graft.gen.TokenGen.childDocs(s, keys),
         broadcastChildren = scaleOf(dir) < 0.1)
       .select(col("doc_id"), col("block_idx"),
@@ -274,14 +275,9 @@ object TokenEngine {
   /** Origin keys of the crawl queries — also exported verbatim by
     * Verify as the DuckDB oracle's origin table (single definition:
     * a divergent copy would make the oracle walk different chains). */
-  private[graft] def crawlOrigins(spark: SparkSession, dir: String): DataFrame = {
-    val n = scaleOf(dir) match {
-      case s if s >= 0.1  => 20000L
-      case s if s >= 0.01 => 2000L
-      case _              => 200L
-    }
-    spark.range(n).select(format_string("crawl/%06d", col("id")).as("origin"))
-  }
+  private[graft] def crawlOrigins(spark: SparkSession, dir: String): DataFrame =
+    spark.range(byScale(dir, 200L, 2000L, 20000L))
+      .select(format_string("crawl/%06d", col("id")).as("origin"))
 
   /** Pagination crawl (J2 generator side, reference
     * paginate/paginate.go + scrape.go:394-427): BySelector chains over
@@ -374,20 +370,12 @@ object TokenEngine {
       .orderBy(col("doc_id"))
   }
 
-  /** Docs count backing [[sessionStitch]]'s fragment stream (same
-    * scaling as docsFor). */
-  private def stitchDocsOf(dir: String): Long = scaleOf(dir) match {
-    case s if s >= 0.1  => 200000L
-    case s if s >= 0.01 => 20000L
-    case _              => 2000L
-  }
-
   /** The stitch driver row's input: the deterministic fragment stream
     * minus late rows (the watermark's drop set — pinned separately by
     * StreamingSpec's late-drop tests), with event_time flattened to ms
     * for export. Shared verbatim with Verify's `stitch_frags` export. */
   private[graft] def stitchFragments(spark: SparkSession, dir: String): DataFrame =
-    graft.gen.TokenGen.fragments(spark, stitchDocsOf(dir))
+    graft.gen.TokenGen.fragments(spark, docCount(dir))
       .filter(!col("is_late"))
       .select(col("doc_id"), col("source"), col("page_idx"), col("frag_idx"),
         unix_millis(col("event_time")).as("event_ms"),
@@ -437,11 +425,7 @@ object TokenEngine {
     * verbatim by Verify as `jar_events` — single definition; the
     * oracle re-derives only the FOLD. */
   private[graft] def jarEvents(spark: SparkSession, dir: String): DataFrame = {
-    val nUsers = scaleOf(dir) match {
-      case s if s >= 0.1  => 10000L
-      case s if s >= 0.01 => 1000L
-      case _              => 100L
-    }
+    val nUsers = byScale(dir, 100L, 1000L, 10000L)
     docsFor(spark, dir).select(
       col("doc_id"),
       concat(lit("u-"), pmod(xxhash64(col("doc_id"), lit("jar-u")), lit(nUsers)))

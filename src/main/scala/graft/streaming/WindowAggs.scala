@@ -1,71 +1,55 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /**
- * Per-source throughput / extraction-count aggregates over event-time
- * windows — north_star: "Tumbling and sliding windows drive per-source
- * throughput/extraction-count aggregates over the RocksDB state
- * store". The reference has no analog (its only "metrics" are the
- * block counter and error list, scrape/structure.go:182-186); these
- * are the monitoring surface the north_rule adds.
+ * Per-key aggregates over event-time windows — north_star: "Tumbling
+ * and sliding windows drive per-source throughput/extraction-count
+ * aggregates over the RocksDB state store". The reference has no
+ * analog (its only "metrics" are the block counter and error list,
+ * scrape/structure.go:182-186); these are the monitoring surface the
+ * north_rule adds.
  *
- * All three shapes are plain Catalyst window aggregations — streaming
- * (append mode + watermark) and batch (the DuckDB-oracle-checked
- * `q_tumbling/q_sliding/q_session` queries in SparkEntry) share this
- * code path.
+ * All three shapes are plain Catalyst window aggregations, and both
+ * uses go through them: the DuckDB-oracle-checked batch queries
+ * `q_tumbling/q_sliding/q_session` ([[graft.queries.Relational]]) and
+ * streaming callers, which put `withWatermark` on the input themselves
+ * and run in append mode. Each returns one row per (window, key):
+ * `w_start`, `w_end`, the key column, then the `aggs` columns.
  *
- * Scale: groupBy(window, source) shuffles on (window, source); the
- * Zipf-hot source is bounded per window by partial (map-side)
- * aggregation — each map task pre-combines its rows, so the reduce-side
- * hot key receives one partial row per map partition, not per input
- * row. On BATCH runs AQE additionally splits residual skew; Spark
- * disables AQE inside stateful streaming queries, so the streaming
- * path relies on partial aggregation alone — sufficient here because
- * the reduce-side row count is bounded by (map partitions × windows),
- * independent of input volume. If a deployment needs more, pre-salt:
- * groupBy(window, source, pmod(hash(doc_id), S)) then re-agg.
+ * Scale: groupBy(window, key) shuffles on (window, key); a Zipf-hot
+ * key is bounded per window by partial (map-side) aggregation — each
+ * map task pre-combines its rows, so the reduce-side hot key receives
+ * one partial row per map partition, not per input row. On BATCH runs
+ * AQE additionally splits residual skew; Spark disables AQE inside
+ * stateful streaming queries, so the streaming path relies on partial
+ * aggregation alone — sufficient here because the reduce-side row
+ * count is bounded by (map partitions × windows), independent of input
+ * volume. If a deployment needs more, pre-salt: groupBy(window, key,
+ * pmod(hash(doc_id), S)) then re-agg.
  */
 object WindowAggs {
 
-  /** Tumbling per-source counts: one row per (window, source). */
-  def tumbling(docs: DataFrame, every: String = "10 seconds",
-               timeCol: String = "event_time"): DataFrame =
-    docs
-      .groupBy(window(col(timeCol), every).as("w"), col("source"))
-      .agg(
-        count(lit(1)).as("n_docs"),
-        sum(col("n_tok")).as("total_tokens"))
-      .select(col("w.start").as("w_start"), col("w.end").as("w_end"),
-        col("source"), col("n_docs"), col("total_tokens"))
+  /** Tumbling windows of length `every`. */
+  def tumbling(docs: DataFrame, timeCol: String, every: String,
+               key: String, aggs: Column*): DataFrame =
+    windowed(docs, window(col(timeCol), every), key, aggs)
 
   /** Sliding windows (length > slide ⇒ each row lands in several). */
-  def sliding(docs: DataFrame, length: String = "30 seconds",
-              slide: String = "10 seconds", timeCol: String = "event_time"): DataFrame =
-    docs
-      .groupBy(window(col(timeCol), length, slide).as("w"), col("source"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("total_tokens"))
-      .select(col("w.start").as("w_start"), col("w.end").as("w_end"),
-        col("source"), col("n_docs"), col("total_tokens"))
+  def sliding(docs: DataFrame, timeCol: String, length: String, slide: String,
+              key: String, aggs: Column*): DataFrame =
+    windowed(docs, window(col(timeCol), length, slide), key, aggs)
 
   /** Session windows with inactivity gap (window end = last event +
     * gap) — the declarative sibling of Stitch's state-level sessions. */
-  def session(docs: DataFrame, gap: String = "30 seconds",
-              key: String = "source", timeCol: String = "event_time"): DataFrame =
-    docs
-      .groupBy(session_window(col(timeCol), gap).as("w"), col(key))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("total_tokens"))
-      .select(col("w.start").as("w_start"), col("w.end").as("w_end"),
-        col(key), col("n_docs"), col("total_tokens"))
+  def session(docs: DataFrame, timeCol: String, gap: String,
+              key: String, aggs: Column*): DataFrame =
+    windowed(docs, session_window(col(timeCol), gap), key, aggs)
 
-  /** Streaming forms: same plans with a watermark, append output. */
-  def tumblingStream(docs: DataFrame, every: String, delay: String): DataFrame =
-    tumbling(docs.withWatermark("event_time", delay), every)
-
-  def slidingStream(docs: DataFrame, length: String, slide: String, delay: String): DataFrame =
-    sliding(docs.withWatermark("event_time", delay), length, slide)
-
-  def sessionStream(docs: DataFrame, gap: String, delay: String): DataFrame =
-    session(docs.withWatermark("event_time", delay), gap)
+  private def windowed(docs: DataFrame, w: Column, key: String, aggs: Seq[Column]): DataFrame = {
+    val grouped = docs.groupBy(w.as("w"), col(key)).agg(aggs.head, aggs.tail: _*)
+    grouped.select(col("w.start").as("w_start") +: col("w.end").as("w_end") +:
+      grouped.columns.toSeq.tail.map(col): _*)
+  }
 }

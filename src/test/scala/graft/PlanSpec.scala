@@ -117,6 +117,16 @@ class PlanSpec extends SparkSuite {
     assert(exchanges <= 2, s"tumbling agg should shuffle at most twice (agg + sort):\n$p")
   }
 
+  test("every table the oracle SQL reads is one Verify exports (SparkEntry.oracleTables)") {
+    // plan-free: an oracle query reading a table Verify does not
+    // export must fail here, not in the DuckDB compare
+    val read = SparkEntry.oracleSql.values
+      .flatMap(sql => "oracle_tables/([a-z0-9_]+)".r.findAllMatchIn(sql).map(_.group(1))).toSet
+    val exported = SparkEntry.oracleTables.map(_._1)
+    assert(exported.distinct == exported, s"duplicate oracle tables: $exported")
+    assert(read == exported.toSet)
+  }
+
   test("no driver-facing query emits nested columns (the driver compare crashes on them)") {
     // Round 1 lost 3 correctness rows to array<...> output columns —
     // the driver's pandas sort dies on unhashable ndarray cells. Guard

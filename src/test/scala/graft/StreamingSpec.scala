@@ -172,25 +172,42 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("tumbling/sliding/session window aggregates over a doc stream") {
-    val mem = MemoryStream[AssembledDoc]
-    val agg = WindowAggs.tumblingStream(mem.toDF(), "10 seconds", "5 seconds")
-    val q = agg.writeStream.format("memory").queryName("win_t").outputMode("append").start()
-    try {
-      mem.addData(
-        AssembledDoc("a", Array(1), 1, "s1", ts(1), 1),
-        AssembledDoc("b", Array(1, 2), 2, "s1", ts(3), 1),
-        AssembledDoc("c", Array(1), 1, "s2", ts(12), 1))
-      q.processAllAvailable()
-      mem.addData(AssembledDoc("~f", Array(1), 1, "s3", ts(100), 1))
-      q.processAllAvailable()
-      mem.addData(AssembledDoc("~f2", Array(1), 1, "s3", ts(200), 1))
-      q.processAllAvailable()
-      val rows = spark.table("win_t").orderBy("w_start", "source").collect()
-      assert(rows.exists(r => r.getAs[String]("source") == "s1" &&
-        r.getAs[Long]("n_docs") == 2 && r.getAs[Long]("total_tokens") == 3))
-      assert(rows.exists(r => r.getAs[String]("source") == "s2" &&
-        r.getAs[Long]("n_docs") == 1))
-    } finally q.stop()
+    // one MemoryStream script per shape: a second query on the same
+    // MemoryStream would lose rows to the first one's commits
+    def run(name: String, shape: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
+        : Seq[(String, Long, Long, Long, Long)] = {
+      val mem = MemoryStream[AssembledDoc]
+      val q = shape(mem.toDF().withWatermark("event_time", "5 seconds"))
+        .writeStream.format("memory").queryName(name).outputMode("append").start()
+      try {
+        mem.addData(
+          AssembledDoc("a", Array(1), 1, "s1", ts(1), 1),
+          AssembledDoc("b", Array(1, 2), 2, "s1", ts(3), 1),
+          AssembledDoc("c", Array(1), 1, "s2", ts(12), 1))
+        q.processAllAvailable()
+        mem.addData(AssembledDoc("~f", Array(1), 1, "s3", ts(100), 1))
+        q.processAllAvailable()
+        mem.addData(AssembledDoc("~f2", Array(1), 1, "s3", ts(200), 1))
+        q.processAllAvailable()
+      } finally q.stop()
+      // (source, window start and end in seconds from BASE_EPOCH, n_docs, total_tokens)
+      def sec(t: Timestamp): Long = (t.getTime - TokenGen.BASE_EPOCH_MS) / 1000L
+      spark.table(name).filter(col("source") =!= "s3").collect().toSeq
+        .map(r => (r.getAs[String]("source"), sec(r.getAs[Timestamp]("w_start")),
+          sec(r.getAs[Timestamp]("w_end")), r.getAs[Long]("n_docs"), r.getAs[Long]("total_tokens")))
+        .sorted
+    }
+    val aggs = Seq(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("total_tokens"))
+    assert(run("win_tumbling", WindowAggs.tumbling(_, "event_time", "10 seconds", "source", aggs: _*)) ==
+      Seq(("s1", 0L, 10L, 2L, 3L), ("s2", 10L, 20L, 1L, 1L)))
+    // 20 s windows every 10 s: each doc lands in two
+    assert(run("win_sliding",
+      WindowAggs.sliding(_, "event_time", "20 seconds", "10 seconds", "source", aggs: _*)) ==
+      Seq(("s1", -10L, 10L, 2L, 3L), ("s1", 0L, 20L, 2L, 3L),
+        ("s2", 0L, 20L, 1L, 1L), ("s2", 10L, 30L, 1L, 1L)))
+    // a 5 s gap joins a (1 s) and b (3 s); a session ends 5 s after its last doc
+    assert(run("win_session", WindowAggs.session(_, "event_time", "5 seconds", "source", aggs: _*)) ==
+      Seq(("s1", 1L, 8L, 2L, 3L), ("s2", 12L, 17L, 1L, 1L)))
   }
 
   test("metrics listener captures per-batch volumes, state totals and late drops") {
